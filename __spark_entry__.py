@@ -184,7 +184,7 @@ def q_scan_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     Family 'o' TTL 1s with now=2500ms → cutoff ts 1500: base puts and the
     exact-Delete at ts 1000 expire, the ts-1700 DeleteFamily survives.
     r14: through the stored client (descriptor families + injected
-    per-scan TTL compose in _apply_descriptor; family 'm' stays
+    per-scan TTL compose in resolve.compose; family 'm' stays
     unbounded, which also pins ts_floor's no-prune rule for mixed
     TTL read sets)."""
     from hbase_snapshot_spark.client import Scan
@@ -199,7 +199,7 @@ def q_scan_family_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """per-family maxVersions caps (Store.versionsToReturn:952):
     scan unbounded, family 'o' capped at 2, family 'm' at 1.  r14:
     through the stored client — the caps compose with the descriptor's
-    keep-all declarations in _apply_descriptor."""
+    keep-all declarations in resolve.compose."""
     from hbase_snapshot_spark.client import Scan
 
     cl = _stored_orders_client(spark, sf_dir)

@@ -21,8 +21,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import functions as F
 
+from hbase_snapshot_spark.client import Get
 from hbase_snapshot_spark.model import FOREVER, FamilyDescriptor, TableDescriptor
-from hbase_snapshot_spark.resolve import ResolveSpec
 from hbase_snapshot_spark.table import Delete, Put
 from hbase_snapshot_spark.table import NoSuchColumnFamilyError as _NoSuchFam
 
@@ -161,7 +161,8 @@ class ATableDescriptor:
     deferredLogFlush: bool | None = None  # noqa: N815
 
 
-def _spec_from(columns, timestamp, timerange, max_versions) -> ResolveSpec:
+def _read_args(columns, timestamp, timerange, max_versions) -> dict:
+    """AGet/AScan projection + time knobs → client Get/Scan keywords."""
     fams, cols = [], {}
     for c in columns or []:
         if c.qualifier is None:
@@ -177,7 +178,7 @@ def _spec_from(columns, timestamp, timerange, max_versions) -> ResolveSpec:
         tr = (timestamp, timestamp + 1)
     elif timerange is not None:
         tr = (timerange.minStamp, timerange.maxStamp)
-    return ResolveSpec(
+    return dict(
         max_versions=max_versions if max_versions is not None else 1,
         families=fams or None,
         columns=cols or None,
@@ -380,15 +381,15 @@ class AvroServer:
     def get(self, table, get: AGet) -> AResult:  # noqa: N802
         """hbase.genavro get"""
         self._check_enabled(table)
-        t = self._table(table)
-        spec = _spec_from(get.columns, get.timestamp, get.timerange,
-                          get.maxVersions)
-        cells = (
-            t.read(spec)
-            .filter(F.col("row") == F.lit(get.row))
-            .orderBy("family", "qualifier", F.col("ts").desc(), F.col("seq").desc())
-            .collect()
-        )
+        g = Get(get.row, **_read_args(get.columns, get.timestamp,
+                                      get.timerange, get.maxVersions))
+        try:
+            out = self._table(table).client().get(g)
+        except _NoSuchFam as ex:
+            raise AIOError(str(ex)) from ex
+        cells = out.orderBy(
+            "family", "qualifier", F.col("ts").desc(), F.col("seq").desc()
+        ).collect()
         return self._result(get.row, cells)
 
     def exists(self, table, get: AGet) -> bool:  # noqa: N802
@@ -450,13 +451,9 @@ class AvroServer:
         from hbase_snapshot_spark.client import RowCursor, Scan
 
         t = self._table(table)
-        spec = _spec_from(scan.columns, scan.timestamp, scan.timerange,
-                          scan.maxVersions)
-        s = Scan(
-            start_row=scan.startRow, stop_row=scan.stopRow,
-            families=spec.families, columns=spec.columns,
-            time_range=spec.time_range, max_versions=spec.max_versions,
-        )
+        s = Scan(start_row=scan.startRow, stop_row=scan.stopRow,
+                 **_read_args(scan.columns, scan.timestamp, scan.timerange,
+                              scan.maxVersions))
         return self._scanners.open(
             RowCursor(t.client().scan(s), self._row_result)
         )

@@ -51,6 +51,7 @@ from pyspark.sql import SparkSession
 
 from hbase_snapshot_spark.client import Get, Scan
 from hbase_snapshot_spark.model import FOREVER, FamilyDescriptor, TableDescriptor
+from hbase_snapshot_spark.resolve import compose
 from hbase_snapshot_spark.sources import tools
 from hbase_snapshot_spark.table import Delete, Put, TableStore
 
@@ -278,12 +279,11 @@ def main(argv: list[str] | None = None) -> int:
         base, name, out, *rest = args
         versions = int(rest[rest.index("--versions") + 1]) if "--versions" in rest else 1
         t = store(base).table(name)
+        caps = compose(t.descriptor)
         tools.export_table(
             t.cells(), out, max_versions=versions,
-            family_ttl=t._family_ttls(),
-            family_max_versions={
-                f.name: f.max_versions for f in t.descriptor.families.values()
-            },
+            family_ttl=caps.family_ttl,
+            family_max_versions=caps.family_max_versions,
         )
         print("ok")
     elif cmd == "import":
@@ -293,7 +293,7 @@ def main(argv: list[str] | None = None) -> int:
         st = store(args[0])
         src = st.table(args[1])
         tools.copy_table(src.cells(), st.table(args[2]),
-                         family_ttl=src._family_ttls())
+                         family_ttl=compose(src.descriptor).family_ttl)
         print("ok")
     elif cmd == "completebulkload":
         v = store(args[0]).table(args[1]).adopt_segment(args[2])

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from hbase_snapshot_spark.filters import Filter
 from hbase_snapshot_spark.model import NoSuchColumnFamilyError, TableDescriptor
 from hbase_snapshot_spark.plans.scan_exec import run_scan
-from hbase_snapshot_spark.resolve import ResolveSpec
+from hbase_snapshot_spark.resolve import ResolveSpec, compose
 
 
 @dataclass
@@ -93,10 +93,6 @@ class Scan:
             family_max_versions=self.family_max_versions,
             family_ttl=self.family_ttl,
             now=self.now,
-            # _apply_descriptor marks the copy when family_ttl covers
-            # every declared family (the unrestricted-scan read set) —
-            # ts_floor's TTL file-prune bound reads it (resolve.py)
-            ttl_complete=getattr(self, "_ttl_complete", False),
         )
 
 
@@ -170,44 +166,36 @@ class RowCursor:
 
 
 class Table:
-    """client/HTable.java — read surface over a cell DataFrame."""
+    """client/HTable.java — read surface over a cell DataFrame.  Every
+    read composes its spec once (:meth:`_spec`) and takes its cells
+    from one selection (:meth:`_select`); a Get is a one-row Scan
+    (HRegion.get:3061)."""
 
-    def __init__(self, cells: DataFrame, descriptor: TableDescriptor | None = None,
+    def __init__(self, cells: DataFrame | None, descriptor: TableDescriptor | None = None,
                  now: int | None = None, cache_owner: str | None = None,
-                 cells_source=None, no_tombstones: bool = False):
+                 source=None):
         self.cells = cells
         self.descriptor = descriptor
         self.now = now
         # registry key for scan-stage persists (the owning StoredTable's
         # directory) — lets the table free them on manifest swap
         self.cache_owner = cache_owner
-        # optional file-pruned provider (StoredTable.cells_for_ranges
-        # bound at the same MVCC version as ``cells``): called with a
-        # list of CLOSED (lo, hi) row ranges, returns a cell stream
-        # restricted to the parquet files that can contain them.  The
-        # scan/get paths still apply their row predicates to the result
-        # — pruning only removes files that cannot match.
-        self.cells_source = cells_source
-        # caller-proven "``cells`` contains zero delete-type cells"
-        # (StoredTable._all_put reads it off the segments' footer type
-        # stats): mask() then skips its three tombstone windows and
-        # row_count takes the RowCounter fast path — identical results
-        # by construction, pinned in tests/test_table.py
-        self.no_tombstones = no_tombstones
+        # the owning StoredTable's pruned-source selection bound at the
+        # client's MVCC version (``StoredTable._source``): called with
+        # the composed spec and a list of CLOSED (lo, hi) row ranges, it
+        # returns the cell stream restricted to the parquet files that
+        # can contain them, and the spec marked delete-free when the
+        # files' footer stats prove it.  None reads ``cells`` whole;
+        # with a source bound ``cells`` is unused (None).
+        self.source = source
 
-    def _apply_descriptor(self, scan: Scan) -> Scan:
-        """compose the descriptor's family caps with the caller's Scan
-        on a COPY — the caller's Scan object is never mutated (reusing
-        one Scan across tables must not leak one table's caps into the
-        next): effective maxVersions = min(user, descriptor); a
-        user-set family TTL overrides the descriptor's."""
-        import copy
-
-        scan = copy.copy(scan)
+    def _spec(self, scan: Scan) -> ResolveSpec:
+        """The scan's spec composed with the descriptor's family caps
+        (``resolve.compose`` — the caller's Scan is never mutated).
+        HRegion.getScanner:2355 / HRegion.get — every requested family
+        must exist in the descriptor (checkFamily); a scan with no
+        family restriction reads all declared families."""
         if self.descriptor is not None:
-            # HRegion.getScanner:2355 / HRegion.get — every requested
-            # family must exist in the descriptor (checkFamily); a scan
-            # with no family restriction reads all declared families
             for fam in list(scan.families or []) + list(scan.columns or {}):
                 name = (
                     fam.decode("utf-8", "replace")
@@ -219,35 +207,20 @@ class Table:
                         f"Column family {name!r} does not exist in region "
                         f"{self.descriptor.name}"
                     )
-            # a scan with no family restriction reads ALL declared
-            # families (HRegion.getScanner:2355).  r14 made that read
-            # set explicit by INJECTING scan.families = all declared —
-            # which bought ts_floor its TTL bound but cost every
-            # unrestricted scan a semantically no-op per-row
-            # family-isin residual in mask() (VERDICT r14 Wrong #5).
-            # r15: the family_ttl map below already covers every
-            # declared family; the _ttl_complete marker tells ts_floor
-            # it may read the TTL map's keys as the read set, so the
-            # injection (and its residual filter) is gone.
-            scan._ttl_complete = True
-            eff_v = {
-                f.name: f.max_versions for f in self.descriptor.families.values()
-            }
-            for fam, n in (scan.family_max_versions or {}).items():
-                eff_v[fam] = min(n, eff_v.get(fam, n))
-            scan.family_max_versions = eff_v
-            eff_t = {f.name: f.ttl for f in self.descriptor.families.values()}
-            eff_t.update(scan.family_ttl or {})
-            scan.family_ttl = eff_t
-            if scan.now is None:
-                scan.now = self.now
-        return scan
+        return compose(self.descriptor, scan.to_spec(), self.now)
+
+    def _select(self, spec: ResolveSpec, ranges: list) -> tuple[DataFrame, ResolveSpec]:
+        """(cells, spec) a read runs over: the bound source's file-pruned
+        stream for ``ranges``, else the whole ``cells`` frame.  Callers
+        still apply their own row predicates to the result."""
+        if self.source is None:
+            return self.cells, spec
+        return self.source(spec, ranges)
 
     def scan(self, scan: Scan | None = None) -> DataFrame:
-        scan = self._apply_descriptor(scan or Scan())
-        return run_scan(self.cells, scan, cache_owner=self.cache_owner,
-                        cells_source=self.cells_source,
-                        no_tombstones=self.no_tombstones)
+        scan = scan or Scan()
+        return run_scan(self.cells, scan, self._spec(scan),
+                        cache_owner=self.cache_owner, select=self._select)
 
     def get(self, get: Get) -> DataFrame:
         scan = Scan(
@@ -259,22 +232,12 @@ class Table:
             max_versions=get.max_versions,
             filter=get.filter,
         )
-        scan = self._apply_descriptor(scan)
         # single-row scan: equality beats the [start, stop) emulation;
-        # the pruned source first shrinks the file list to the (at most
-        # one, for a bulk-loaded segment) file covering the key — plus
-        # the ts floor (time-range/TTL) so WAL segments wholly below it
-        # are skipped too (ts-only manifests; TimeRangeTracker parity)
-        base = self.cells
-        if self.cells_source is not None:
-            from hbase_snapshot_spark.resolve import ts_floor
-
-            base = self.cells_source([(get.row, get.row)],
-                                     ts_lo=ts_floor(scan.to_spec()))
-        out = run_scan(base.filter(F.col("row") == F.lit(get.row)), scan,
-                       cache_owner=self.cache_owner,
-                       no_tombstones=self.no_tombstones)
-        return out
+        # the selection first shrinks the file list to the (at most one,
+        # for a bulk-loaded segment) file covering the key
+        cells, spec = self._select(self._spec(scan), [(get.row, get.row)])
+        return run_scan(cells.filter(F.col("row") == F.lit(get.row)), scan,
+                        spec, cache_owner=self.cache_owner)
 
     def exists(self, get: Get) -> bool:
         """HTable.exists:651 — existence probe."""
@@ -283,18 +246,12 @@ class Table:
     def get_row_or_before(self, row, family: str | None = None) -> DataFrame:
         """HTable.getRowOrBefore:472 / Store.getRowKeyAtOrBefore:980 —
         the closest row at-or-before the key (as-of point lookup)."""
-        scan = self._apply_descriptor(Scan(families=[family] if family else None))
+        scan = Scan(families=[family] if family else None)
         # row-key restriction commutes with resolution (masking and
         # version counting are per-(row, family, qualifier)), so the
         # at-or-before read only needs files with rows <= the key
-        base = self.cells
-        if self.cells_source is not None:
-            from hbase_snapshot_spark.resolve import ts_floor
-
-            base = self.cells_source([(None, row)],
-                                     ts_lo=ts_floor(scan.to_spec()))
-        resolved = run_scan(base, scan, cache_owner=self.cache_owner,
-                            no_tombstones=self.no_tombstones)
+        cells, spec = self._select(self._spec(scan), [(None, row)])
+        resolved = run_scan(cells, scan, spec, cache_owner=self.cache_owner)
         target = resolved.filter(F.col("row") <= F.lit(row)).agg(
             F.max("row").alias("row")
         )
@@ -329,7 +286,7 @@ class Table:
         no time range, no qualifier projection — the count runs
         without the resolve windows:
 
-        * delete-free stream (``no_tombstones``): every cell is a PUT
+        * delete-free stream (``spec.no_tombstones``): every cell is a PUT
           and only TTL can expire one — after the TTL predicate the
           count is ``distinct(row)`` over the raw stream.  Version
           counting can never hide a row (the newest version of each
@@ -356,39 +313,31 @@ class Table:
           DELETEs mask every put at their ts regardless of seq, as in
           mask().  TTL expiry is applied FIRST (expired tombstones no
           longer mask — the ScanQueryMatcher order), row bounds and
-          family projection before that, and the file-skipping
-          manifest prunes like run_scan stage 1.
+          family projection before that, and the cells come from the
+          same pruned selection as every other read.
 
         Equality with the resolve path is pinned in tests/test_table.py
         on tombstone-rich fixtures and for every ineligible-guard
         shape."""
         from hbase_snapshot_spark.model import KeyType
-        from hbase_snapshot_spark.resolve import _ttl_predicate, ts_floor
+        from hbase_snapshot_spark.resolve import _ttl_predicate
 
-        eff = self._apply_descriptor(scan or Scan())
-        if eff.filter is not None or eff.time_range is not None \
-                or eff.columns is not None:
+        scan = scan or Scan()
+        spec = self._spec(scan)
+        if scan.filter is not None or spec.time_range is not None \
+                or spec.columns is not None:
             return self.scan(scan).select("row").distinct()
-        spec = eff.to_spec()
-        cells = self.cells
-        ts_lo = ts_floor(spec)
-        if self.cells_source is not None and (
-                eff.start_row is not None or eff.stop_row is not None
-                or ts_lo is not None):
-            rngs = ([(eff.start_row, eff.stop_row)]
-                    if (eff.start_row is not None or eff.stop_row is not None)
-                    else [])
-            cells = self.cells_source(rngs, ts_lo=ts_lo)
-        if eff.start_row is not None:
-            cells = cells.filter(F.col("row") >= F.lit(eff.start_row))
-        if eff.stop_row is not None:
-            cells = cells.filter(F.col("row") < F.lit(eff.stop_row))
-        if eff.families is not None:
-            cells = cells.filter(F.col("family").isin(list(eff.families)))
+        cells, spec = self._select(spec, [(scan.start_row, scan.stop_row)])
+        if scan.start_row is not None:
+            cells = cells.filter(F.col("row") >= F.lit(scan.start_row))
+        if scan.stop_row is not None:
+            cells = cells.filter(F.col("row") < F.lit(scan.stop_row))
+        if spec.families is not None:
+            cells = cells.filter(F.col("family").isin(list(spec.families)))
         ttl_pred = _ttl_predicate(spec)
         if ttl_pred is not None:
             cells = cells.filter(ttl_pred)
-        if self.no_tombstones:
+        if spec.no_tombstones:
             return cells.select("row").distinct()
         t, ts = F.col("type"), F.col("ts")
         g1 = cells.repartition("row").groupBy(

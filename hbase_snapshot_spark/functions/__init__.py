@@ -43,7 +43,9 @@ def memo_exprs(tag: str, key: tuple, build):
     cache = _EXPR_MEMO.setdefault(sc, {})
     k = (tag,) + tuple(key)
     if k not in cache:
-        cache[k] = build()
+        # concurrent first callers may each build; setdefault keeps the
+        # first stored one, so every caller gets the identical object
+        return cache.setdefault(k, build())
     return cache[k]
 
 

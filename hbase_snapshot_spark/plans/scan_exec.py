@@ -63,9 +63,13 @@ def release_caches(owner: "str | None") -> int:
     return len(handles)
 
 
-def run_scan(cells: DataFrame, scan, cache_owner: str | None = None,
-             cells_source=None, no_tombstones: bool = False) -> DataFrame:
+def run_scan(cells: DataFrame, scan, spec: ResolveSpec | None = None,
+             cache_owner: str | None = None, select=None) -> DataFrame:
     """Execute a client.Scan against a raw cell DataFrame.
+
+    ``spec``: the resolve spec to run under — the client passes its
+    descriptor-composed one (``resolve.compose``); default
+    ``scan.to_spec()``.
 
     ``cache_owner``: registry key for any persist this scan takes out,
     so the owning table can release it on manifest swap.  Ownerless
@@ -76,25 +80,16 @@ def run_scan(cells: DataFrame, scan, cache_owner: str | None = None,
     overflow — always safe, the plan recomputes from segment files);
     ``release_caches(None)`` still frees the bucket eagerly.
 
-    ``cells_source``: optional file-pruned provider (a StoredTable's
-    cells_for_ranges bound at the scan's MVCC version).  Once stage 1
-    has the effective [start, stop) — scan bounds tightened by the
-    filter's range hint — the provider swaps in a cell stream read
-    from only the parquet files whose per-file row min/max can
-    intersect it (the bulk_load/compact skipping manifest).  The stage
-    1 predicate is STILL applied as a residual, so the result is
+    ``select``: the owning table's pruned-source selection
+    (``client.Table._select``).  Once stage 1 has the effective
+    [start, stop) — scan bounds tightened by the filter's range hint —
+    it returns the cell stream read from only the files that can
+    intersect it (and the spec, delete-free when proven).  The stage 1
+    predicate is STILL applied as a residual, so the result is
     identical by construction; the exclusive ``stop`` is passed as a
-    closed hi (a superset — never drops a matching file).  A
-    time-range / TTL spec additionally passes :func:`resolve.ts_floor`
-    as ``ts_lo`` — the TimeRangeTracker-parity file prune (sound floor
-    only; the masked stream still applies the full time predicates)."""
-    from hbase_snapshot_spark.resolve import ts_floor
-
-    spec: ResolveSpec = scan.to_spec()
-    # caller-proven delete-free input (the owning table's footer type
-    # stats — StoredTable._all_put): mask() then skips its tombstone
-    # windows (see ResolveSpec.no_tombstones); identical results
-    spec.no_tombstones = no_tombstones
+    closed hi (a superset — never drops a matching file)."""
+    if spec is None:
+        spec = scan.to_spec()
     compiled = scan.filter.compile() if scan.filter is not None else None
 
     # ---- stage 1: key-range pruning (pushed to the parquet scan)
@@ -116,12 +111,10 @@ def run_scan(cells: DataFrame, scan, cache_owner: str | None = None,
                 start = h_start
             if stop is None or (h_stop is not None and h_stop < stop):
                 stop = h_stop
-    ts_lo = ts_floor(spec)
-    if cells_source is not None and (
-            start is not None or stop is not None or ts_lo is not None):
+    if select is not None:
         # driver-side FILE pruning before Spark plans; residual below
-        rngs = [(start, stop)] if (start is not None or stop is not None) else []
-        cells = cells_source(rngs, ts_lo=ts_lo)
+        cells, spec = select(spec, [(start, stop)]
+                             if (start is not None or stop is not None) else [])
     if start is not None:
         pred = F.col("row") >= F.lit(start)
     if stop is not None:

@@ -237,7 +237,7 @@ def bulk_load(
             # regionserver/TimeRangeTracker.java:147 tracks per-HFile ts
             # bounds that StoreFile.Reader.shouldSeek:991 consults);
             # type min/max prove a delete-free segment (r15 — the
-            # per-HFile "no deletes" stat: StoredTable._all_put lets
+            # per-HFile "no deletes" stat: StoredTable._files lets
             # mask() skip its tombstone windows on such tables)
             write_skipping_manifest(out_path, ["row", "ts", "type"])
         except OSError as e:

@@ -42,11 +42,12 @@ import os
 import shutil
 import time
 import uuid
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hbase_snapshot_spark.client import Table as ClientTable
+from hbase_snapshot_spark.client import Get, Table as ClientTable
 from hbase_snapshot_spark.model import (
     LATEST_TIMESTAMP,
     KeyType,
@@ -54,7 +55,7 @@ from hbase_snapshot_spark.model import (
     TableDescriptor,
     cell_schema,
 )
-from hbase_snapshot_spark.resolve import ResolveSpec, resolve, ts_floor
+from hbase_snapshot_spark.resolve import ResolveSpec, compose, resolve, ts_floor
 
 SNAPSHOT_DIR = ".snapshot"  # HConstants.java:152
 _SEQ_SHIFT = 20  # seq = commit_seq << 20 | intra-batch ordinal
@@ -520,24 +521,30 @@ class StoredTable:
 
     def cells(self, version: int | None = None) -> DataFrame:
         """the raw cell stream at a manifest version (MVCC read point)."""
-        m = self.manifest(version)
-        paths = [os.path.join(self.dir, "segments", s) for s in m["segments"]]
-        if not paths:
-            return self.spark.createDataFrame([], schema=cell_schema(binary=m["binary"]))
-        # project to the cell schema: adopted bulk segments may carry aux
-        # pruning columns (e.g. the ROWCOL bloom key) that must not leak
-        # into the logical cell stream
-        want = [f.name for f in cell_schema(binary=m["binary"]).fields]
-        return self.spark.read.parquet(*paths).select(*want)
+        return self._files(self.manifest(version), None, None)[0]
 
     def cells_for_ranges(self, ranges: "list | None", version: int | None = None,
                          ts_lo: "int | None" = None) -> DataFrame:
         """the raw cell stream restricted DRIVER-SIDE to the parquet
         files whose per-file ``row`` min/max can intersect any of the
         closed ``ranges`` (list of (lo, hi); either side None =
-        unbounded) — the engine-side consumer of the file-skipping
-        manifest (operators/layout.py) that bulk_load / compact publish
-        with each sorted segment.
+        unbounded) and whose ts max reaches ``ts_lo`` — see
+        :meth:`_files`.  Every engine read selects its cells through
+        :meth:`_source`, which passes :func:`resolve.ts_floor` as
+        ``ts_lo``."""
+        if not ranges and ts_lo is None:
+            raise ValueError(
+                "need at least one (lo, hi) row range or a ts_lo bound")
+        return self._files(self.manifest(version), ranges, ts_lo)[0]
+
+    def _files(self, m: dict, ranges: "list | None",
+               ts_lo: "int | None") -> "tuple[DataFrame, bool]":
+        """ONE walk over manifest ``m``'s segment skipping manifests
+        (operators/layout.py — bulk_load / compact publish row+ts+type
+        stats per file, WAL appends ts+type) returning the cell stream
+        read from only the files that can hold a cell in one of the
+        closed row ``ranges`` at ts >= ``ts_lo``, and whether every
+        kept file is proven delete-free.
 
         Why this path exists: Spark prunes ROW GROUPS per file only
         AFTER scheduling a task and opening the footer — at 100 TB a
@@ -547,37 +554,41 @@ class StoredTable:
         before Spark ever plans, so a point get against a bulk-loaded
         table schedules ~1 file, not ~all of them.
 
-        ``ts_lo`` additionally drops files whose recorded ts MAX sits
-        below it — the TimeRangeTracker-parity time prune
-        (TimeRangeTracker.java:147 / StoreFile.shouldSeek:991): pass
-        :func:`~hbase_snapshot_spark.resolve.ts_floor`'s bound for the
-        scan's spec.  Only a FLOOR is ever sound (ts_floor's docstring:
-        deletes newer than a time range still mask), and it is what
-        carves WAL-append segments — row-unprunable, but time-clustered
-        (append_cells publishes TS-ONLY manifests for them).
+        ``ts_lo`` drops files whose recorded ts MAX sits below it — the
+        TimeRangeTracker-parity time prune (TimeRangeTracker.java:147 /
+        StoreFile.shouldSeek:991).  Only a FLOOR is ever sound
+        (ts_floor's docstring: deletes newer than a time range still
+        mask), and it is what carves WAL-append segments —
+        row-unprunable, but time-clustered.
+
+        The delete-free proof is each kept file's footer ``type`` min ==
+        max == PUT — the per-HFile "no deletes" metadata of the
+        reference.  Unknown (a segment without a manifest, or one
+        without type stats) reads False: mask() just keeps its
+        tombstone windows.
 
         Purely an optimization, never a semantic change: a segment
         without a manifest contributes ALL its files, a file whose
         stats cannot rule the ranges out is kept, and the caller still
-        applies its own row/time predicates to the result (pruning only
-        removes files that cannot match)."""
-        if not ranges and ts_lo is None:
-            raise ValueError(
-                "need at least one (lo, hi) row range or a ts_lo bound")
+        applies its own row/time predicates to the result."""
         from hbase_snapshot_spark.operators.layout import (
             prune_files,
             prune_files_ranges,
         )
 
-        m = self.manifest(version)
-        want = [f.name for f in cell_schema(binary=m["binary"]).fields]
+        def put_only(stats):
+            st = stats.get("type")
+            return bool(st) and st[0] == st[1] == KeyType.PUT
+
+        ranges = [r for r in ranges or [] if r != (None, None)]
+        seg_dirs = [os.path.join(self.dir, "segments", s) for s in m["segments"]]
         paths: list[str] = []
-        pruned_any = False
-        for s in m["segments"]:
-            seg_dir = os.path.join(self.dir, "segments", s)
+        pruned_any, all_put = False, True
+        for seg_dir in seg_dirs:
             skip = _segment_skip_manifest(seg_dir)
             if skip is None:
                 paths.append(seg_dir)         # unprunable: read whole dir
+                all_put = False
                 continue
             cols = skip.get("columns", [])
             keep = set(skip["files"])
@@ -585,56 +596,44 @@ class StoredTable:
                 keep &= set(prune_files_ranges(skip, "row", ranges))
             if ts_lo is not None and "ts" in cols:
                 keep &= set(prune_files(skip, {"ts": (ts_lo, None)}))
-            if len(keep) < len(skip["files"]):
-                pruned_any = True
+            pruned_any = pruned_any or len(keep) < len(skip["files"])
+            all_put = all_put and "type" in cols and all(
+                put_only(skip["files"][f]) for f in keep)
             paths.extend(os.path.join(seg_dir, f) for f in sorted(keep))
         if not pruned_any:
-            # same plan as the unpruned read — keeps directory-listing
-            # semantics and any cached scans reusable
-            return self.cells(version)
+            # the unpruned read: whole segment directories
+            # (directory-listing semantics)
+            paths = seg_dirs
+        schema = cell_schema(binary=m["binary"])
         if not paths:
-            return self.spark.createDataFrame(
-                [], schema=cell_schema(binary=m["binary"]))
-        # explicit schema: file-level reads must not let an adopted
-        # segment's aux columns (ROWCOL key) pick the inferred schema
-        return (self.spark.read.schema(cell_schema(binary=m["binary"]))
-                .parquet(*paths).select(*want))
+            return self.spark.createDataFrame([], schema=schema), all_put
+        # explicit cell schema: no schema-inference job per read, and an
+        # adopted bulk segment's aux pruning columns (e.g. the ROWCOL
+        # bloom key) never leak into the logical cell stream
+        return self.spark.read.schema(schema).parquet(*paths), all_put
 
-    def _all_put(self, version: int | None = None) -> bool:
-        """True when every segment's skipping manifest PROVES the cell
-        stream at this version holds zero delete-type cells: each
-        file's footer ``type`` min == max == PUT.  The per-HFile
-        "no deletes" metadata of the reference, read driver-side from
-        the cached manifests (no Spark job).  Unknown — a segment
-        without a manifest, or one predating the r15 type stats —
-        conservatively reads False (mask just keeps its tombstone
-        windows; never a correctness question)."""
-        m = self.manifest(version)
-        for s in m["segments"]:
-            skip = _segment_skip_manifest(os.path.join(self.dir, "segments", s))
-            if skip is None or "type" not in skip.get("columns", []):
-                return False
-            for stats in skip["files"].values():
-                st = stats.get("type")
-                if (not st or st[0] != KeyType.PUT or st[1] != KeyType.PUT):
-                    return False
-        return True
+    def _source(self, m: dict, spec: ResolveSpec,
+                ranges: list = ()) -> "tuple[DataFrame, ResolveSpec]":
+        """The pruned-source selection every engine read takes its cells
+        from: manifest ``m``'s files that can hold the closed row
+        ``ranges`` at ts >= :func:`resolve.ts_floor` of ``spec`` (the
+        sound time-range/TTL floor), and a copy of ``spec`` marked
+        ``no_tombstones`` when those files are proven delete-free —
+        mask() then skips its three tombstone windows.  Callers still
+        apply their own row predicates; results are identical."""
+        cells, all_put = self._files(m, ranges, ts_floor(spec))
+        return cells, replace(spec, no_tombstones=all_put)
 
     def client(self, version: int | None = None, now: int | None = None) -> ClientTable:
         self._check_enabled()
-        # pin the MVCC read point NOW: the bound cell stream, the
-        # DESCRIPTOR (family caps/TTLs — r13 review: reading it from
-        # HEAD paired version-v data with version-v+1 caps when an
-        # alter/restore raced the two reads), and the pruned source
-        # must all resolve the same manifest version
-        v = self._head_version() if version is None else version
-        desc = TableDescriptor.from_dict(self.manifest(v)["descriptor"])
-        return ClientTable(self.cells(v), desc, now=now,
-                           cache_owner=self.dir,
-                           cells_source=lambda ranges, ts_lo=None:
-                               self.cells_for_ranges(
-                                   ranges, version=v, ts_lo=ts_lo),
-                           no_tombstones=self._all_put(v))
+        # pin the MVCC read point NOW: the DESCRIPTOR (family caps/TTLs
+        # — r13 review: reading it from HEAD paired version-v data with
+        # version-v+1 caps when an alter/restore raced the two reads)
+        # and the pruned source must resolve the same manifest version
+        m = self.manifest(version)
+        return ClientTable(None, TableDescriptor.from_dict(m["descriptor"]),
+                           now=now, cache_owner=self.dir,
+                           source=lambda spec, ranges: self._source(m, spec, ranges))
 
     def create_view(self, view_name: str, spec: ResolveSpec | None = None,
                     version: int | None = None) -> None:
@@ -644,34 +643,15 @@ class StoredTable:
         stream in plain SQL)."""
         self.read(spec=spec, version=version).createOrReplaceTempView(view_name)
 
-    def _composed_spec(self, spec: ResolveSpec | None) -> ResolveSpec:
-        """Descriptor-composed copy of the caller's spec: per-family
-        maxVersions compose by min (Store.versionsToReturn), caller-set
-        family TTLs override the descriptor's.  Never mutates the
-        caller's spec."""
-        from dataclasses import replace
-
-        spec = replace(spec) if spec is not None else ResolveSpec(max_versions=None)
-        desc = self.descriptor
-        eff_versions = {f.name: f.max_versions for f in desc.families.values()}
-        for fam, n in (spec.family_max_versions or {}).items():
-            eff_versions[fam] = min(n, eff_versions.get(fam, n))
-        spec.family_max_versions = eff_versions
-        eff_ttl = {f.name: f.ttl for f in desc.families.values()}
-        eff_ttl.update(spec.family_ttl or {})  # caller override wins
-        spec.family_ttl = eff_ttl
-        # the map now covers every declared family — ts_floor may read
-        # its keys as the unrestricted-scan read set (resolve.py)
-        spec.ttl_complete = True
-        return spec
-
     def read(self, spec: ResolveSpec | None = None, version: int | None = None) -> DataFrame:
         """Resolved view under the table descriptor: per-family
         maxVersions AND TTLs apply (TTL `now` = wall clock unless the
         caller's spec injects one — same contract as scans).  The
         caller's spec is never mutated; caller-set family caps compose
         with the descriptor's (min wins, Store.versionsToReturn)."""
-        return resolve(self.cells(version), spec=self._composed_spec(spec))
+        cells, spec = self._source(self.manifest(version),
+                                   compose(self.descriptor, spec))
+        return resolve(cells, spec=spec)
 
     def scan_ranges(self, ranges: list, spec: ResolveSpec | None = None,
                     version: int | None = None) -> DataFrame:
@@ -681,7 +661,7 @@ class StoredTable:
         HALF-OPEN (lo, hi) row bands, both sides required.
 
         Plan: (1) the file-skipping manifest prunes the FILE LIST
-        driver-side (``cells_for_ranges``; the closed treatment of the
+        driver-side (:meth:`_source`; the closed treatment of the
         half-open his keeps a superset), (2) the surviving cells are
         row-restricted by the block-bucket broadcast LEFT SEMI join
         (:func:`~hbase_snapshot_spark.plans.multirange.restrict_row_ranges`
@@ -692,9 +672,8 @@ class StoredTable:
         touched bands — the shape that holds at 100 TB."""
         from hbase_snapshot_spark.plans.multirange import restrict_row_ranges
 
-        spec = self._composed_spec(spec)
-        cells = self.cells_for_ranges(list(ranges), version=version,
-                                      ts_lo=ts_floor(spec))
+        cells, spec = self._source(self.manifest(version),
+                                   compose(self.descriptor, spec), list(ranges))
         return resolve(restrict_row_ranges(cells, list(ranges)), spec=spec)
 
     # ---------------------------------------------------------- writes
@@ -743,6 +722,10 @@ class StoredTable:
         commit_seq = m["commit_seq"] + 1
         if "seq" not in df.columns:
             df = df.withColumn("seq", F.lit(commit_seq << _SEQ_SHIFT).cast("long"))
+        # segments hold exactly the table's cell schema: reads pass it
+        # explicitly instead of inferring it from the files (_files)
+        df = df.select(*[F.col(f.name).cast(f.dataType)
+                         for f in cell_schema(binary=m["binary"]).fields])
         seg = f"seg-{commit_seq:06d}-wal-{uuid.uuid4().hex[:8]}"
         seg_dir = os.path.join(self.dir, "segments", seg)
         df.write.parquet(seg_dir)
@@ -767,7 +750,7 @@ class StoredTable:
         ``type`` min/max ride along (r15): a segment whose every file
         reads type min == max == PUT is proven delete-free — the
         per-HFile "no deletes" metadata the reference keeps — which
-        lets reads skip mask()'s tombstone windows (_all_put)."""
+        lets reads skip mask()'s tombstone windows (_files)."""
         from hbase_snapshot_spark.operators.layout import write_skipping_manifest
 
         write_skipping_manifest(seg_dir, ["ts", "type"])
@@ -866,7 +849,7 @@ class StoredTable:
                 key = (h(row), h(family), h(qualifier))
                 latest_counts[key] = latest_counts.get(key, 0) + 1
         latest_map = (
-            self._latest_ts_map(latest_counts) if latest_counts else {}
+            self._latest_ts_map(latest_counts, m) if latest_counts else {}
         )
         # "latest" is resolved at APPLY time in the reference (a server-
         # side get per Delete), so a Put earlier in the same batch is
@@ -924,9 +907,6 @@ class StoredTable:
         m2["commit_seq"] = commit_seq
         return self._commit(m2)
 
-    def _family_ttls(self) -> dict:
-        return {f.name: f.ttl for f in self.descriptor.families.values()}
-
     def _check_family(self, family, families: set | None = None) -> None:
         """HRegion.checkFamily:2391 — reject families the descriptor
         does not declare (reads AND mutations go through this in the
@@ -974,11 +954,9 @@ class StoredTable:
         return codes
 
     def _latest_cell(self, row, family, qualifier):
-        out = resolve(
-            self.cells().filter(F.col("row") == F.lit(row)),
-            spec=ResolveSpec(max_versions=1, columns={family: [qualifier]},
-                             family_ttl=self._family_ttls()),
-        ).collect()
+        """the newest visible cell of one column, or None — the Get the
+        reference issues inside checkAndMutate / incrementColumnValue"""
+        out = self.client().get(Get(row, columns={family: [qualifier]})).collect()
         return out[0] if out else None
 
     @staticmethod
@@ -988,29 +966,20 @@ class StoredTable:
         # bytes-keyed lookups match
         return bytes(v) if isinstance(v, (bytearray, memoryview)) else v
 
-    def _latest_ts_map(self, counts: dict) -> dict:
-        """One-job newest-versions lookup: ``counts`` maps a hashable
-        (row, family, qualifier) key to how many newest version ts are
-        needed (the per-qualifier occurrence count of latest-deletes —
-        HRegion.delete:1240-1250).  Returns key → [ts desc].  Version
-        visibility honors the family maxVersions cap, like the get the
-        reference issues per delete cell.  Key sets come from a mutation
-        batch, so they are driver-sized by construction."""
-        if not counts:
-            return {}
+    def _latest_ts_map(self, counts: dict, m: dict) -> dict:
+        """One-job newest-versions lookup at manifest ``m``: ``counts``
+        maps a hashable (row, family, qualifier) key to how many newest
+        version ts are needed (the per-qualifier occurrence count of
+        latest-deletes — HRegion.delete:1240-1250).  Returns key → [ts
+        desc].  Version visibility honors the descriptor's caps, like
+        the get the reference issues per delete cell.  Key sets come
+        from a mutation batch, so they are driver-sized by construction."""
         h = self._hashable
         rows = list({r for (r, _f, _q) in counts})
-        vis = resolve(
-            self.cells().filter(F.col("row").isin(rows)),
-            spec=ResolveSpec(
-                max_versions=max(counts.values()),
-                family_ttl=self._family_ttls(),
-                family_max_versions={
-                    f.name: f.max_versions
-                    for f in self.descriptor.families.values()
-                },
-            ),
-        )
+        spec = compose(TableDescriptor.from_dict(m["descriptor"]),
+                       ResolveSpec(max_versions=max(counts.values())))
+        cells, spec = self._source(m, spec, [(r, r) for r in rows])
+        vis = resolve(cells.filter(F.col("row").isin(rows)), spec=spec)
         # only (family, qualifier) pairs the batch touches reach the
         # driver, and only the 4 key columns — resolve still sees the
         # touched rows' FULL column set (family/column tombstones mask
@@ -1028,10 +997,6 @@ class StoredTable:
             if key in counts:
                 out.setdefault(key, []).append(c.ts)
         return {k: sorted(v, reverse=True)[: counts[k]] for k, v in out.items()}
-
-    def _latest_ts(self, row, family, qualifier):
-        c = self._latest_cell(row, family, qualifier)
-        return c.ts if c is not None else None
 
     def _check_matches(self, row, family, qualifier, expected) -> bool:
         """HRegion.checkAndMutate:1568-1575 — an ABSENT column matches
@@ -1144,17 +1109,9 @@ class StoredTable:
         m = self.manifest()
         keep: list[str] = []
         if major:
-            spec = ResolveSpec(
-                max_versions=None,
-                family_max_versions={
-                    f.name: f.max_versions for f in desc.families.values()
-                },
-            )
-            ttls = {f.name: f.ttl for f in desc.families.values()}
-            if any(t < (1 << 31) - 1 for t in ttls.values()):
-                spec.family_ttl = ttls
-                spec.now = now if now is not None else self._now_ms()
-            compacted = resolve(self.cells(), spec=spec)
+            cells, spec = self._source(m, compose(
+                desc, now=now if now is not None else self._now_ms()))
+            compacted = resolve(cells, spec=spec)
         elif segments is not None:
             merge = [s for s in m["segments"] if s in set(segments)]
             keep = [s for s in m["segments"] if s not in set(segments)]
@@ -1201,18 +1158,13 @@ class StoredTable:
         m2["descriptor"] = descriptor.to_dict()
         return self._commit(m2)
 
-    def maybe_compact(self, threshold: int = 3, major: bool = False,
-                      incremental: bool = True) -> int | None:
+    def maybe_compact(self, threshold: int = 3) -> int | None:
         """Store.java:169 compactionThreshold — compact when the live
         segment count reaches the threshold (the reference's minor-
-        compaction trigger; call after batch appends).  Minor compactions
-        use the HBASE-745 incremental selection by default, merging only
-        the newest size-similar run; ``incremental=False`` restores the
-        merge-everything behavior."""
+        compaction trigger; call after batch appends), merging only the
+        newest size-similar run (HBASE-745 incremental selection)."""
         if len(self.manifest()["segments"]) < threshold:
             return None
-        if major or not incremental:
-            return self.compact(major=major)
         chosen = self.select_minor_compaction(threshold=threshold)
         if not chosen:
             return None

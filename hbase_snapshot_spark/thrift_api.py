@@ -19,15 +19,13 @@ toLocalIterator so only one partition is driver-resident at a time.
 
 from __future__ import annotations
 
-import itertools
 from dataclasses import dataclass, field
 
 from pyspark.sql import functions as F
 
 from hbase_snapshot_spark.filters import PrefixFilter
-from hbase_snapshot_spark.client import Scan
-from hbase_snapshot_spark.resolve import ResolveSpec
-from hbase_snapshot_spark.table import Delete, Put
+from hbase_snapshot_spark.client import Get, Scan
+from hbase_snapshot_spark.table import Delete, NoSuchColumnFamilyError, Put
 
 
 class IOError_(Exception):
@@ -244,18 +242,25 @@ class ThriftServer:
 
     # ----------------------------------------------------------- reads
 
+    def _get(self, tableName, get: Get):
+        """the client Get every thrift point read runs, with the
+        reference's error surface: an undeclared family is the declared
+        IOError (HRegion.get's checkFamily NoSuchColumnFamilyException,
+        wrapped like every IOException — see :meth:`_mutate`)."""
+        try:
+            return self._table(tableName).client().get(get)
+        except NoSuchColumnFamilyError as ex:
+            raise IOError_(str(ex)) from ex
+
     def _cells(self, tableName, row, column, num_versions, timestamp=None):
         fam, qual = _split_column(column)
-        t = self._table(tableName)
-        spec = ResolveSpec(
-            max_versions=num_versions,
+        out = self._get(tableName, Get(
+            row,
             families=[fam] if qual is None else None,
             columns={fam: [qual]} if qual is not None else None,
+            max_versions=num_versions,
             time_range=(_LONG_MIN, timestamp) if timestamp is not None else None,
-        )
-        out = t.read(spec).filter(F.col("row") == F.lit(row)).orderBy(
-            F.col("ts").desc(), F.col("seq").desc()
-        )
+        )).orderBy(F.col("ts").desc(), F.col("seq").desc())
         return [TCell(c.value, c.ts) for c in out.collect()]
 
     def get(self, tableName, row, column) -> list[TCell]:  # noqa: N802
@@ -273,44 +278,36 @@ class ThriftServer:
         the IDL doc comment says '<=' but the implementation is '<')."""
         return self._cells(tableName, row, column, numVersions, timestamp)
 
-    def _rows(self, tableName, rows, columns=None, timestamp=None):
-        t = self._table(tableName)
+    def _rows(self, tableName, row, columns=None, timestamp=None):
         fams, cols = _columns_spec(columns)
-        spec = ResolveSpec(
-            max_versions=1,
+        out = self._get(tableName, Get(
+            row,
             families=fams,
             columns=cols,
             time_range=(_LONG_MIN, timestamp) if timestamp is not None else None,
-        )
-        out = (
-            t.read(spec)
-            .filter(F.col("row").isin(list(rows)))
-            .orderBy("row", "family", "qualifier")
-            .collect()
-        )
-        results = []
-        for row_key, cells in itertools.groupby(out, key=lambda c: c.row):
-            results.append(TRowResult(
-                row_key,
-                {f"{c.family}:{c.qualifier}": TCell(c.value, c.ts) for c in cells},
-            ))
-        return results
+        )).orderBy("family", "qualifier").collect()
+        if not out:
+            return []
+        return [TRowResult(
+            out[0].row,
+            {f"{c.family}:{c.qualifier}": TCell(c.value, c.ts) for c in out},
+        )]
 
     def getRow(self, tableName, row) -> list[TRowResult]:  # noqa: N802
         """Hbase.thrift getRow:307 — all columns, latest versions."""
-        return self._rows(tableName, [row])
+        return self._rows(tableName, row)
 
     def getRowWithColumns(self, tableName, row, columns) -> list[TRowResult]:  # noqa: N802
         """Hbase.thrift getRowWithColumns:322"""
-        return self._rows(tableName, [row], columns)
+        return self._rows(tableName, row, columns)
 
     def getRowTs(self, tableName, row, timestamp) -> list[TRowResult]:  # noqa: N802
         """Hbase.thrift getRowTs:338 — snapshot as of ts."""
-        return self._rows(tableName, [row], None, timestamp)
+        return self._rows(tableName, row, None, timestamp)
 
     def getRowWithColumnsTs(self, tableName, row, columns, timestamp) -> list[TRowResult]:  # noqa: N802
         """Hbase.thrift getRowWithColumnsTs:355"""
-        return self._rows(tableName, [row], columns, timestamp)
+        return self._rows(tableName, row, columns, timestamp)
 
     # ---------------------------------------------------------- writes
 
@@ -339,8 +336,6 @@ class ThriftServer:
         naming an undeclared family is the declared IOError
         (ThriftServer wraps IOExceptions — NoSuchColumnFamilyException
         included — never an application-level fault)."""
-        from hbase_snapshot_spark.table import NoSuchColumnFamilyError
-
         try:
             table.mutate(muts)
         except NoSuchColumnFamilyError as ex:

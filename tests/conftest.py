@@ -20,6 +20,11 @@ def spark():
         # matters for the scale posture)
         .config("spark.sql.adaptive.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "10m")
+        # tables here grow one segment directory per mutate batch: past
+        # the default 32 root paths every read would launch a parallel
+        # file-listing JOB (doubling a point get's latency); list them
+        # on the driver instead — results are identical either way
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "4g")
         .getOrCreate()

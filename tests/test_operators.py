@@ -223,6 +223,41 @@ def test_expr_memo_semantics(docs, spark):
     assert all(r1[k] == v for k, v in r2.items())
 
 
+def test_expr_memo_concurrent_first_callers_share_one_object(spark):
+    """memo_exprs: concurrent FIRST callers of one key all receive the
+    identical object, even when each of them builds one."""
+    import sys
+    import threading
+    import time
+
+    from hbase_snapshot_spark.functions import memo_exprs
+
+    n = 8
+    gate = threading.Barrier(n)
+    got = [None] * n
+
+    def caller(i):
+        def build():
+            time.sleep(0.02 * i)        # stagger the stores
+            return object()
+
+        gate.wait(timeout=10)
+        got[i] = memo_exprs("memo_race_test", (), build)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=caller, args=(i,)) for i in range(n)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=30)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert got[0] is not None and all(g is got[0] for g in got)
+
+
 def test_token_count(spark):
     df = spark.createDataFrame([("hello world, 42 foo-bar",)], ["text"])
     n = df.select(text.token_count(F.col("text")).alias("n")).collect()[0].n

@@ -255,18 +255,6 @@ def test_binary_keys_unsigned_order(spark):
     assert len(out) == 1 and bytes(out[0].value) == b"hi"
 
 
-def test_keep_tombstones_minor_compaction(spark):
-    # MinorCompactingStoreScanner.java — minor compaction keeps deletes
-    df = cells_df(spark, [
-        put("r1", "f", "q", 10, "v10"),
-        delete_column("r1", "f", "q", 15),
-        put("r1", "f", "q", 20, "v20"),
-    ])
-    out = resolve(df, spec=ResolveSpec(max_versions=None, keep_tombstones=True))
-    types = sorted(r.type for r in out.collect())
-    assert types == [4, 12]  # surviving put + kept tombstone
-
-
 def test_resolved_to_rows_duplicate_ts(spark):
     # same (row,f,q,ts) rewritten with a newer seq: the nested-map
     # materialization collapses to the newer value (TreeMap.put

@@ -41,6 +41,12 @@ def cellset(df):
     return {(r.row, r.family, r.qualifier, r.ts, r.value) for r in df.collect()}
 
 
+def proven_delete_free(cl, scan=None):
+    """whether the client's cell selection for an unbounded ``scan``
+    carries the footer-stat delete-free proof"""
+    return cl._select(cl._spec(scan or Scan()), [])[1].no_tombstones
+
+
 def test_create_list_drop(store):
     _mk(store, "a")
     _mk(store, "b")
@@ -827,8 +833,8 @@ def _put_cells(spark, n=200, versions=2):
 
 def test_all_put_stat_and_tombstone_window_skip(store, spark):
     """r15 (VERDICT r14 Next #4): segments publish footer type min/max;
-    a table whose every file is all-PUT binds a no_tombstones client
-    whose mask() skips the tombstone windows — results identical, plan
+    a table whose every file is all-PUT gives its client a
+    delete-free selection whose mask() skips the tombstone windows — results identical, plan
     provably window-free — and the stat flips off (and results stay
     correct) the moment a delete segment lands."""
     import io
@@ -836,10 +842,8 @@ def test_all_put_stat_and_tombstone_window_skip(store, spark):
 
     t = _mk(store)
     t.append_cells(_put_cells(spark))
-    assert t._all_put() is True
-
     cl = t.client()
-    assert cl.no_tombstones is True
+    assert proven_delete_free(cl) is True
     # parity: the window-free scan equals the full resolve path
     from hbase_snapshot_spark.client import Table as ClientTable
 
@@ -859,10 +863,31 @@ def test_all_put_stat_and_tombstone_window_skip(store, spark):
 
     # a delete flips the stat off and masking still applies
     t.mutate([Delete("000001")], now=10_000)
-    assert t._all_put() is False
     cl2 = t.client()
-    assert cl2.no_tombstones is False
+    assert proven_delete_free(cl2) is False
     assert cl2.row_count() == 199
+
+
+def test_read_and_scan_ranges_skip_tombstone_windows_when_all_put(store, spark):
+    """StoredTable.read() and scan_ranges() select their cells through
+    the same front door as client scans, so an all-PUT table's resolve
+    plan carries no tombstone windows — with results equal to the
+    windowed resolve over the raw stream."""
+    import io
+    from contextlib import redirect_stdout
+
+    from hbase_snapshot_spark.resolve import ResolveSpec, resolve
+
+    t = _mk(store)
+    t.append_cells(_put_cells(spark))
+    spec = ResolveSpec(max_versions=None)
+    for df in (t.read(spec), t.scan_ranges([("000010", "000020")], spec)):
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain("simple")
+        assert "_famdel" not in buf.getvalue()
+        assert "_coldel" not in buf.getvalue()
+    assert cellset(t.read(spec)) == cellset(resolve(t.cells(), spec=spec))
 
 
 def test_row_count_fast_path_parity_and_guards(store, spark):
@@ -876,7 +901,7 @@ def test_row_count_fast_path_parity_and_guards(store, spark):
     t = _mk(store)
     t.append_cells(_put_cells(spark, n=150))
     cl = t.client()
-    assert cl.no_tombstones is True
+    assert proven_delete_free(cl) is True
     slow = lambda s=None: cl.scan(s).select("row").distinct().count()  # noqa: E731
 
     assert cl.row_count() == slow() == 150
@@ -909,14 +934,13 @@ def test_ttl_floor_via_ttl_complete_without_family_injection(store, spark):
 
     t = _mk(store)
     cl = t.client()
-    eff = cl._apply_descriptor(Scan(family_ttl={"f": 1, "g": 1}, now=3_600_000))
-    assert eff.families is None  # no injection
-    spec = eff.to_spec()
+    spec = cl._spec(Scan(family_ttl={"f": 1, "g": 1}, now=3_600_000))
+    assert spec.families is None  # no injection
     assert spec.ttl_complete is True
     assert ts_floor(spec) == 3_600_000 - 1000
     # an unbounded family in the read set kills the TTL bound (sound)
-    eff2 = cl._apply_descriptor(Scan(family_ttl={"f": 1}, now=3_600_000))
-    assert ts_floor(eff2.to_spec()) is None
+    spec2 = cl._spec(Scan(family_ttl={"f": 1}, now=3_600_000))
+    assert ts_floor(spec2) is None
 
 
 def test_row_count_agg_path_tombstone_parity(spark, tmp_path, sf_dir):
@@ -935,9 +959,8 @@ def test_row_count_agg_path_tombstone_parity(spark, tmp_path, sf_dir):
         .add_family(FamilyDescriptor("o", max_versions=FOREVER))
         .add_family(FamilyDescriptor("m", max_versions=FOREVER)))
     t.append_cells(encode_orders_cells(spark, sf_dir))
-    assert t._all_put() is False          # the fixture has tombstones
     cl = t.client()
-    assert cl.no_tombstones is False
+    assert proven_delete_free(cl) is False  # the fixture has tombstones
 
     def slow(s=None):
         return cl.scan(s).select("row").distinct().count()
