@@ -21,18 +21,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hbase_snapshot_spark.table import write_json_atomic
+
 _FORMAT = "model-parquet"
 _VERSION = 1
-
-
-def write_json_atomic(dir_path: str, name: str, obj: dict) -> None:
-    """tmp-write + rename JSON publish — the one manifest writer shared
-    by this store and similarity.AnnIndex (two drifting copies of the
-    integrity machinery is how format bugs are born)."""
-    tmp = os.path.join(dir_path, f".{name}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(obj, f, indent=1)
-    os.replace(tmp, os.path.join(dir_path, name))
 
 
 def save_model(
@@ -51,7 +43,7 @@ def save_model(
         "params": params or {}, "rows": int(rows),
         "columns": data.columns,
     }
-    write_json_atomic(path, "manifest.json", manifest)
+    write_json_atomic(os.path.join(path, "manifest.json"), manifest)
     return manifest
 
 

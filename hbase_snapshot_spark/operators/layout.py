@@ -327,7 +327,7 @@ def write_skipping_manifest(path: str, cols: list[str]) -> dict:
     manifest dict."""
     import pyarrow.parquet as pq
 
-    from hbase_snapshot_spark.operators.artifacts import write_json_atomic
+    from hbase_snapshot_spark.table import write_json_atomic
 
     files: dict[str, dict] = {}
     for f in sorted(_data_files(path)):
@@ -369,7 +369,7 @@ def write_skipping_manifest(path: str, cols: list[str]) -> dict:
             c: [_encode_stat(v) for v in mm] for c, mm in stats.items()
         }
     manifest = {"columns": list(cols), "files": files}
-    write_json_atomic(path, SKIP_MANIFEST_NAME, manifest)
+    write_json_atomic(os.path.join(path, SKIP_MANIFEST_NAME), manifest)
     return manifest
 
 

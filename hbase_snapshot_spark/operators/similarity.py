@@ -779,11 +779,11 @@ class AnnIndex:
         self._centroids_path = os.path.join(path, "centroids")
 
     def _write_manifest(self) -> None:
-        from hbase_snapshot_spark.operators.artifacts import (
-            write_json_atomic,
-        )
+        import os
 
-        write_json_atomic(self.path, "manifest.json", self.manifest)
+        from hbase_snapshot_spark.table import write_json_atomic
+
+        write_json_atomic(os.path.join(self.path, "manifest.json"), self.manifest)
 
     @property
     def centroids(self) -> DataFrame:

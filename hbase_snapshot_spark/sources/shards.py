@@ -26,7 +26,7 @@ files and diffs against the manifest (legacy manifests without
 ``hashsum`` verify on count+xor only).
 
 The manifest file itself publishes atomically via
-``artifacts.write_json_atomic`` on the DRIVER-LOCAL filesystem —
+``table.write_json_atomic`` on the DRIVER-LOCAL filesystem —
 point ``path`` at storage the driver can open() (local disk, a
 fuse/NFS mount); the parquet shards themselves go through Spark's
 filesystem layer and take any URI.
@@ -40,8 +40,8 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hbase_snapshot_spark.operators.artifacts import write_json_atomic
 from hbase_snapshot_spark.operators.sampling import shard_shuffle
+from hbase_snapshot_spark.table import write_json_atomic
 
 MANIFEST_NAME = "_shard_manifest.json"
 
@@ -111,7 +111,7 @@ def write_training_shards(
     }
     # atomic publish (tmp + rename): a crash mid-json.dump left a
     # truncated manifest next to complete-looking shard data
-    write_json_atomic(path, MANIFEST_NAME, manifest)
+    write_json_atomic(os.path.join(path, MANIFEST_NAME), manifest)
     return manifest
 
 

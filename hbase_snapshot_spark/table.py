@@ -23,29 +23,40 @@ Re-creates the reference's storage semantics with Spark-native parts:
     SnapshotLogCleaner / refcount-protected-compaction rule
     (HRegion.java:765, master/SnapshotLogCleaner.java:42).
 
-Concurrency model: single-writer-per-table batch engine (a lock file is
-taken best-effort); this is the documented stand-in for HBase's row
-locks + MVCC write path, and what makes checkAndMutate / increment
-atomic (HRegion.checkAndMutate:1544, incrementColumnValue:3106).
+Concurrency model: single-writer-per-table batch engine (an advisory
+``flock`` on ``WRITER.lock``, released by the kernel when its holder
+dies); this is the documented stand-in for HBase's row locks + MVCC
+write path, and what makes checkAndMutate / increment atomic
+(HRegion.checkAndMutate:1544, incrementColumnValue:3106).
 
-Scale: segments are plain parquet directories written by Spark jobs —
-a 1000-executor bulk load writes one segment with thousands of files;
-reads are ``spark.read.parquet(seg1, seg2, ...)`` so partition pruning,
-predicate pushdown, and row-group skipping all apply.
+Scale: segments are plain parquet directories.  A mutation batch is
+driver-resident (the client write buffer), so ``mutate`` writes its
+segment on the driver as ONE pyarrow parquet file — no Spark job.  The
+distributed paths (append_cells, bulk_load, compaction) write through
+Spark: a 1000-executor bulk load writes one segment with thousands of
+files.  Reads are ``spark.read.parquet(seg1, seg2, ...)`` so partition
+pruning, predicate pushdown, and row-group skipping all apply.
 """
 
 from __future__ import annotations
 
+import contextlib
 import errno
+import fcntl
 import json
 import os
+import re
 import shutil
+import threading
 import time
 import uuid
 from dataclasses import replace
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from hbase_snapshot_spark.client import Get, Table as ClientTable
 from hbase_snapshot_spark.model import (
@@ -58,6 +69,7 @@ from hbase_snapshot_spark.model import (
 from hbase_snapshot_spark.resolve import ResolveSpec, compose, resolve, ts_floor
 
 SNAPSHOT_DIR = ".snapshot"  # HConstants.java:152
+_MANIFEST_NAME = re.compile(r"v(\d+)\.json")
 _SEQ_SHIFT = 20  # seq = commit_seq << 20 | intra-batch ordinal
 
 
@@ -150,9 +162,7 @@ class TableStore:
         # TestAdmin.testTableNames:510)
         if not descriptor.name or not isinstance(descriptor.name, str):
             raise ValueError("table name must be a non-empty string")
-        import re as _re
-
-        if descriptor.name[0] in ".-" or not _re.fullmatch(
+        if descriptor.name[0] in ".-" or not re.fullmatch(
             r"[a-zA-Z0-9_.-]+", descriptor.name
         ):
             raise ValueError(f"Illegal table name {descriptor.name!r}")
@@ -172,8 +182,8 @@ class TableStore:
             "commit_seq": 0,
             "binary": binary,
         }
-        _write_json(os.path.join(d, "manifests", "v0.json"), manifest)
-        _write_json(os.path.join(d, "HEAD.json"), {"version": 0})
+        write_json_atomic(os.path.join(d, "manifests", "v0.json"), manifest)
+        write_json_atomic(os.path.join(d, "HEAD.json"), {"version": 0})
         return StoredTable(self, descriptor.name)
 
     def drop_table(self, name: str) -> None:
@@ -264,7 +274,7 @@ class TableStore:
         info["snapshot_name"] = snapshot_name
         info["snapshot_table"] = table_name
         info["creation_time"] = int(time.time() * 1000)
-        _write_json(os.path.join(tmp, "snapshotinfo.json"), info)
+        write_json_atomic(os.path.join(tmp, "snapshotinfo.json"), info)
         try:
             os.rename(tmp, sd)
         except OSError as e:
@@ -318,8 +328,8 @@ class TableStore:
             "commit_seq": info["commit_seq"],
             "binary": info["binary"],
         }
-        _write_json(os.path.join(d, "manifests", "v1.json"), manifest)
-        _write_json(os.path.join(d, "HEAD.json"), {"version": 1})
+        write_json_atomic(os.path.join(d, "manifests", "v1.json"), manifest)
+        write_json_atomic(os.path.join(d, "HEAD.json"), {"version": 1})
         return StoredTable(self, name)
 
     def delete_snapshot(self, snapshot_name: str) -> None:
@@ -329,11 +339,17 @@ class TableStore:
         shutil.rmtree(sd)
 
 
-def _write_json(path: str, obj) -> None:
-    tmp = path + f".tmp-{uuid.uuid4().hex[:8]}"
+def write_json_atomic(path: str, obj) -> None:
+    """Publish ``obj`` as JSON at ``path`` with one atomic rename — the
+    manifest/HEAD swap, and every other JSON manifest in the package.
+    The temp name is hidden (a Spark directory read skips it) and
+    unique per call, so concurrent writers of one name never share a
+    temp file; a crash leaves only an ignorable hidden file."""
+    d, name = os.path.split(path)
+    tmp = os.path.join(d, f".{name}.tmp-{uuid.uuid4().hex}")
     with open(tmp, "w") as f:
         json.dump(obj, f, indent=1)
-    os.replace(tmp, path)  # atomic on POSIX — the manifest swap
+    os.replace(tmp, path)
 
 
 def _segment_skip_manifest(seg_dir: str) -> "dict | None":
@@ -384,21 +400,72 @@ def _read_json(path: str):
         return json.load(f)
 
 
-import threading as _threading
-
-_SKIP_MANIFEST_LOCK = _threading.Lock()
-
-#: per-table-directory in-process locks (threaded wire servers share a
-#: TableStore) + lockfile re-entrancy depth; both guarded by the RLock
-#: itself (only the holding thread touches its depth entry)
-_PROC_TABLE_LOCKS: dict[str, _threading.RLock] = {}
-_PROC_TABLE_LOCKS_GUARD = _threading.Lock()
-_LOCK_DEPTH: dict[str, int] = {}
+_SKIP_MANIFEST_LOCK = threading.Lock()
 
 
-def _proc_table_lock(table_dir: str) -> _threading.RLock:
-    with _PROC_TABLE_LOCKS_GUARD:
-        return _PROC_TABLE_LOCKS.setdefault(table_dir, _threading.RLock())
+class _WriterLock:
+    """One table directory's writer lock in this process.  A per-
+    directory RLock serializes THREADS (the thrift/avro/REST servers
+    run threaded transports and share a TableStore) and gives per-
+    thread re-entrancy; the outermost holder also takes an exclusive
+    ``flock`` on ``WRITER.lock`` to serialize PROCESSES.  The flock
+    lives on the open fd, so the kernel drops it when the holder dies —
+    a killed writer never wedges the table.  ``depth`` and ``fd`` are
+    touched only by the thread holding the RLock."""
+
+    def __init__(self, path: str):
+        self.path = path
+        self.rlock = threading.RLock()
+        self.depth = 0
+        self.fd = -1
+
+    def acquire(self, deadline: float) -> bool:
+        # the thread-level wait shares the flock wait's deadline — a
+        # hung same-process writer surfaces as TimeoutError, not an
+        # infinite block
+        if not self.rlock.acquire(timeout=max(0.0, deadline - time.time())):
+            return False
+        if self.depth == 0:
+            try:
+                fd = os.open(self.path, os.O_CREAT | os.O_RDWR)
+            except OSError:
+                self.rlock.release()
+                raise
+            while True:
+                try:
+                    fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                    break
+                except BlockingIOError:
+                    if time.time() > deadline:
+                        os.close(fd)
+                        self.rlock.release()
+                        return False
+                    time.sleep(0.05)
+            self.fd = fd
+        self.depth += 1
+        return True
+
+    def release(self) -> None:
+        self.depth -= 1
+        if self.depth == 0:
+            # the lock file stays: unlinking it would let a waiter that
+            # already opened it lock an inode nobody else will see
+            os.close(self.fd)             # closing the fd drops the flock
+            self.fd = -1
+        self.rlock.release()
+
+
+_WRITER_LOCKS: dict[str, _WriterLock] = {}
+_WRITER_LOCKS_GUARD = threading.Lock()
+
+
+def _writer_lock(table_dir: str) -> _WriterLock:
+    with _WRITER_LOCKS_GUARD:
+        lk = _WRITER_LOCKS.get(table_dir)
+        if lk is None:
+            lk = _WRITER_LOCKS[table_dir] = _WriterLock(
+                os.path.join(table_dir, "WRITER.lock"))
+        return lk
 
 
 def _locked(fn):
@@ -432,69 +499,21 @@ class StoredTable:
     def descriptor(self) -> TableDescriptor:
         return TableDescriptor.from_dict(self.manifest()["descriptor"])
 
+    @contextlib.contextmanager
     def _lock(self, timeout_s: float = 30.0):
-        """advisory single-writer lock — the stand-in for HBase's row
-        locks + MVCC write path; serializes manifest commits so
-        checkAndMutate/increment read-modify-writes are atomic
-        (HRegion.checkAndMutate:1544).
-
-        Two layers: a per-table-directory RLock serializes THREADS in
-        this process (the thrift/avro/REST servers run threaded
-        transports — TestMultiParallelPut caught the old per-instance
-        re-entrancy flag letting a second thread skip the lock), and
-        the O_EXCL lockfile serializes PROCESSES.  Re-entrancy is
-        per-thread via the RLock; the lockfile is taken only at depth
-        0, keyed by directory so every StoredTable handle of one table
-        shares the same depth counter."""
-        path = os.path.join(self.dir, "WRITER.lock")
-        deadline = time.time() + timeout_s
-        table = self
-        rlock = _proc_table_lock(self.dir)
-
-        class _Lock:
-            acquired = False
-
-            def __enter__(self_inner):
-                # bound the thread-level wait by the same deadline as
-                # the lockfile spin — a hung same-process writer must
-                # surface as TimeoutError, not an infinite block
-                if not rlock.acquire(timeout=max(0.0, deadline - time.time())):
-                    raise TimeoutError(
-                        f"writer lock on {table.name} held too long"
-                    )
-                self_inner.acquired = True
-                if _LOCK_DEPTH.get(path, 0) == 0:
-                    while True:
-                        try:
-                            fd = os.open(
-                                path, os.O_CREAT | os.O_EXCL | os.O_WRONLY
-                            )
-                            os.write(fd, str(os.getpid()).encode())
-                            os.close(fd)
-                            break
-                        except FileExistsError:
-                            if time.time() > deadline:
-                                rlock.release()
-                                self_inner.acquired = False
-                                raise TimeoutError(
-                                    f"writer lock on {table.name} held too long"
-                                ) from None
-                            time.sleep(0.05)
-                _LOCK_DEPTH[path] = _LOCK_DEPTH.get(path, 0) + 1
-                return self_inner
-
-            def __exit__(self_inner, *exc):
-                if self_inner.acquired:
-                    _LOCK_DEPTH[path] -= 1
-                    if _LOCK_DEPTH[path] == 0:
-                        try:
-                            os.remove(path)
-                        except FileNotFoundError:
-                            pass
-                    rlock.release()
-                return False
-
-        return _Lock()
+        """advisory single-writer lock (:class:`_WriterLock`) — the
+        stand-in for HBase's row locks + MVCC write path; serializes
+        manifest commits so checkAndMutate/increment read-modify-writes
+        are atomic (HRegion.checkAndMutate:1544).  Re-entrant per
+        thread; every StoredTable handle of one directory shares it.
+        Raises TimeoutError when not acquired within ``timeout_s``."""
+        lk = _writer_lock(self.dir)
+        if not lk.acquire(time.time() + timeout_s):
+            raise TimeoutError(f"writer lock on {self.name} held too long")
+        try:
+            yield
+        finally:
+            lk.release()
 
     def _commit(self, manifest: dict) -> int:
         """write manifest version N+1 and atomically repoint HEAD.
@@ -507,8 +526,8 @@ class StoredTable:
                 f"concurrent commit detected on {self.name}: "
                 f"HEAD=v{head}, committing v{v}"
             )
-        _write_json(os.path.join(self.dir, "manifests", f"v{v}.json"), manifest)
-        _write_json(os.path.join(self.dir, "HEAD.json"), {"version": v})
+        write_json_atomic(os.path.join(self.dir, "manifests", f"v{v}.json"), manifest)
+        write_json_atomic(os.path.join(self.dir, "HEAD.json"), {"version": v})
         # the swap supersedes any filter-stream caches taken out against
         # the previous version — free their blocks instead of letting
         # them rot in the storage pool until LRU eviction
@@ -793,7 +812,15 @@ class StoredTable:
     @_locked
     def mutate(self, mutations: list[Mutation], now: int | None = None) -> int:
         """Apply a batch of Puts/Deletes (HTable write buffer +
-        flushCommits, HTable.java:534,662).  One segment per batch.
+        flushCommits, HTable.java:534,662).  One segment per batch: ONE
+        parquet file in exactly the table's cell schema, written on the
+        driver with pyarrow — the WAL append launches no Spark job (only
+        a no-ts deleteColumn's latest-version lookup reads through
+        Spark).  The file and its ts/type skip manifest are written
+        into a hidden ``segments/.tmp-<seg>`` directory and renamed into
+        place before the manifest commit, so no reader, glob or replica
+        ever sees a partial segment; vacuum removes a crashed writer's
+        temp directory.
 
         Boundary: this is the INTERACTIVE write path — the mutation list
         is driver-resident, like the reference's client-side write
@@ -802,11 +829,11 @@ class StoredTable:
         ``sources.tools.bulk_load`` + ``adopt_segment`` (sorted bulk
         pipeline), or ``sources.tools.multi_table_write``."""
         now = now if now is not None else self._now_ms()
-        desc = self.descriptor
-        m = self.manifest()
+        m = self.manifest()             # one manifest read for the batch
         self._check_writable(m)
+        desc = TableDescriptor.from_dict(m["descriptor"])
         empty_qual = b"" if m["binary"] else ""
-        declared = set(desc.families)  # one manifest read for the batch
+        declared = set(desc.families)
         h = self._hashable
         # flatten: whole-row deletes expand to DeleteFamily per family
         # (HRegion.prepareDelete:1164-1179); a null qualifier on a
@@ -890,17 +917,25 @@ class StoredTable:
                 "use append_cells/bulk_load for bulk ingest"
             )
         if not rows:
-            return self._head_version()
+            return m["version"]
         commit_seq = m["commit_seq"] + 1
         base_seq = commit_seq << _SEQ_SHIFT
-        rows = [
-            (r, f, q, ts, t, base_seq + o, v) for (r, f, q, ts, t, o, v) in rows
-        ]
-        df = self.spark.createDataFrame(rows, schema=cell_schema(binary=m["binary"]))
+        # binary values arrive as bytes/bytearray/memoryview: write bytes
+        rows = [(h(r), f, h(q), ts, t, base_seq + o, h(v))
+                for (r, f, q, ts, t, o, v) in rows]
+        schema = to_arrow_schema(cell_schema(binary=m["binary"]))
+        batch = pa.Table.from_pydict(dict(zip(schema.names, zip(*rows))),
+                                     schema=schema)
         seg = f"seg-{commit_seq:06d}-wal-{uuid.uuid4().hex[:8]}"
-        seg_dir = os.path.join(self.dir, "segments", seg)
-        df.write.parquet(seg_dir)
-        self._publish_ts_manifest(seg_dir)
+        segroot = os.path.join(self.dir, "segments")
+        tmp = os.path.join(segroot, f".tmp-{seg}")
+        os.makedirs(tmp)
+        # the parquet schema alone round-trips the cell schema: skip the
+        # redundant serialized Arrow schema (~600 B of footer per file)
+        pq.write_table(batch, os.path.join(
+            tmp, f"part-00000-{uuid.uuid4()}.snappy.parquet"), store_schema=False)
+        self._publish_ts_manifest(tmp)
+        os.rename(tmp, os.path.join(segroot, seg))
         m2 = dict(m)
         m2["version"] = m["version"] + 1
         m2["segments"] = list(m["segments"]) + [seg]
@@ -1118,7 +1153,11 @@ class StoredTable:
             if len(merge) <= 1:
                 return self._head_version()
             paths = [os.path.join(self.dir, "segments", s) for s in merge]
-            compacted = self.spark.read.parquet(*paths)
+            # explicit cell schema, as in _files: no schema-inference
+            # job, and a bulk segment's aux columns (the ROWCOL ``_rc``
+            # key) never carry into the compacted segment
+            compacted = self.spark.read.schema(
+                cell_schema(binary=m["binary"])).parquet(*paths)
         else:
             compacted = self.cells()
         # partition count from cluster parallelism, not from the input
@@ -1170,13 +1209,21 @@ class StoredTable:
             return None
         return self.compact(segments=chosen)
 
+    def _manifest_files(self) -> dict[str, "int | None"]:
+        """every entry of ``manifests/`` → its committed version, or
+        None for anything that is not a ``vN.json`` (a crashed writer's
+        temp file)"""
+        mdir = os.path.join(self.dir, "manifests")
+        return {f: int(mt[1]) if (mt := _MANIFEST_NAME.fullmatch(f)) else None
+                for f in os.listdir(mdir)}
+
     def history(self) -> list[dict]:
         """time-travel listing (the Delta DESCRIBE HISTORY analogue —
         SURVEY §2.6): every retained manifest version, newest first."""
-        mdir = os.path.join(self.dir, "manifests")
         out = []
-        for f in sorted(os.listdir(mdir), key=lambda n: int(n[1:-5]), reverse=True):
-            m = _read_json(os.path.join(mdir, f))
+        for v in sorted((v for v in self._manifest_files().values()
+                         if v is not None), reverse=True):
+            m = self.manifest(v)
             out.append({
                 "version": m["version"],
                 "commit_seq": m["commit_seq"],
@@ -1249,7 +1296,7 @@ class StoredTable:
         info["snapshot_name"] = name
         info["snapshot_table"] = self.name
         info["created_version"] = m["version"]
-        _write_json(os.path.join(sd, "snapshotinfo.json"), info)
+        write_json_atomic(os.path.join(sd, "snapshotinfo.json"), info)
 
     def list_snapshots(self) -> list[str]:
         base = os.path.join(self.dir, SNAPSHOT_DIR)
@@ -1365,11 +1412,10 @@ class StoredTable:
             if seg not in refs:
                 shutil.rmtree(os.path.join(segdir, seg))
                 removed.append(seg)
-        # also drop superseded manifest versions
+        # also drop superseded manifest versions and temp leftovers
         head = self._head_version()
         mdir = os.path.join(self.dir, "manifests")
-        for f in os.listdir(mdir):
-            v = int(f[1:-5])
+        for f, v in self._manifest_files().items():
             if v != head:
                 os.remove(os.path.join(mdir, f))
         return sorted(removed)
