@@ -136,7 +136,10 @@ def run_scan(cells: DataFrame, scan, spec: ResolveSpec | None = None,
     # stamp join, WhileMatch's cut).  The single-pass window transforms
     # (pagination family) used to trigger this too — materializing the
     # whole masked table into the storage pool for a stream consumed
-    # exactly once.
+    # exactly once.  A registered stream also serves LATER reads of the
+    # same table version (read, view, diff): the CacheManager swaps it
+    # into any plan holding the same masked stream, so those reads skip
+    # the source scan and the mask windows
     multi_use = compiled is not None and (
         compiled.row_keep is not None
         or compiled.row_drop is not None

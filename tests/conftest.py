@@ -16,8 +16,8 @@ def spark():
         .config("spark.sql.shuffle.partitions", "2")
         .config("spark.sql.session.timeZone", "UTC")
         # tiny-data unit tests: AQE re-planning overhead dominates, turn it
-        # off here (it stays ON in bench.py / __spark_entry__.py where it
-        # matters for the scale posture)
+        # off here (it stays ON in perfbench/run.py / __spark_entry__.py
+        # where it matters for the scale posture)
         .config("spark.sql.adaptive.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "10m")
         # tables here grow one segment directory per mutate batch: past

@@ -1,9 +1,10 @@
 """The engine's first-class multi-range row restriction
 (plans/multirange.restrict_row_ranges + StoredTable.scan_ranges) — the
-r15 promotion of bench.py's r14 band semi-join (VERDICT r14 Next #1).
+r15 promotion of the old benchmark harness's r14 band semi-join
+(VERDICT r14 Next #1).
 
-Pins, ported from tests/test_bench_bands.py and extended to the
-arbitrary-key paths the bench-private helper lacked:
+Pins, covering every case of that harness's band tests and extended to
+the arbitrary-key paths the harness-private helper lacked:
 
 * row-for-row parity with the OR-of-bands predicate it replaces —
   disjoint, overlapping (left-semi: no duplicates), boundary

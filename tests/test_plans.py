@@ -190,7 +190,7 @@ def test_while_match_stream_is_persisted(spark, stored):
 
 
 def test_random_seek_scan_plan_shape(spark, stored):
-    # bench.random_seek_scan: the seek dim must reach the cells via a
+    # a batch of seek scans: the seek dim must reach the cells via a
     # broadcast HASH join on the row-key block (never a nested-loop or
     # cartesian — a banded BNLJ evaluates every seek's band against
     # every cell), and the per-seek rank<=100 cap must get Spark's
@@ -218,7 +218,7 @@ def test_random_seek_scan_plan_shape(spark, stored):
 
 
 def test_sequential_read_no_global_sort(spark, stored):
-    # bench.sequential_read: whole-table row-order materialization must
+    # a sequential read: whole-table row-order materialization must
     # be range-partition + LOCAL sorts (scale path) — any single-node
     # global sort is a regression
     rows = resolve(stored, spec=ResolveSpec(max_versions=1))
@@ -267,6 +267,33 @@ def test_scan_cache_released_on_manifest_swap(spark, tmp_path):
     # and the pre-swap DataFrame still computes (plan recomputes from
     # the pre-vacuum segment files)
     assert out.count() == 19
+
+
+def test_scan_cache_serves_later_reads_of_the_version(spark, tmp_path):
+    """A multi-use filter scan's persisted masked stream also serves
+    later whole-table reads of the same table version: the CacheManager
+    substitutes it into any plan holding the same masked stream.  This
+    is where the registry pays on batch work (a view or diff read after
+    a filter scan); the next manifest swap releases it."""
+    from hbase_snapshot_spark.client import Scan
+    from hbase_snapshot_spark.filters import (
+        BinaryComparator, CompareOp, SkipFilter, ValueFilter,
+    )
+    from hbase_snapshot_spark.model import FamilyDescriptor, TableDescriptor
+    from hbase_snapshot_spark.table import Put, TableStore
+
+    store = TableStore(spark, str(tmp_path / "tables"))
+    t = store.create_table(
+        TableDescriptor("reuset").add_family(FamilyDescriptor("f")))
+    t.mutate([Put(f"r{i}").add("f", "q", f"v{i}") for i in range(20)])
+    assert "InMemoryTableScan" not in plan_of(t.read(), "simple")
+
+    flt = SkipFilter(ValueFilter(CompareOp.NOT_EQUAL, BinaryComparator("v3")))
+    assert t.client().scan(Scan(filter=flt)).count() == 19
+    assert "InMemoryTableScan" in plan_of(t.read(), "simple")
+
+    t.mutate([Put("r0").add("f", "q", "w0")])
+    assert "InMemoryTableScan" not in plan_of(t.read(), "simple")
 
 
 def test_melt_input_partitions_spread(spark):
@@ -376,10 +403,10 @@ def test_rfm_scores_no_single_task_window(spark):
     # cache's materialization.  Counted on the FULL plan string: under
     # AQE the final-plan section prints materialized stages as bare
     # QueryStage references, so at data scale only the last stage's
-    # cache scan survives in `final` (scale_stress shape_checks hit
-    # exactly that).  (executedPlan().toString() prints each cache's
-    # MATERIALIZATION plan inline under its InMemoryRelation node, so
-    # strip those subtrees before counting source scans.)
+    # cache scan survives in `final`.  (executedPlan().toString()
+    # prints each cache's MATERIALIZATION plan inline under its
+    # InMemoryRelation node, so strip those subtrees before counting
+    # source scans.)
     assert plan.count("InMemoryTableScan") >= 3, plan
     import re
     top = _strip_cached_subtrees(final)
@@ -387,11 +414,25 @@ def test_rfm_scores_no_single_task_window(spark):
     assert len(scans) == 0, top
 
 
-# shared with scripts/scale_stress.py so the unit pin and the
-# scale-stress shape check can never silently diverge
-from hbase_snapshot_spark.plans.plan_text import (  # noqa: E402
-    strip_cached_subtrees as _strip_cached_subtrees,
-)
+def _strip_cached_subtrees(plan: str) -> str:
+    """Drop every InMemoryRelation node and its nested cached-plan
+    printout (deeper-indented lines), leaving only operators THIS
+    query's execution actually runs.  ``executedPlan().toString()``
+    prints each cache's MATERIALIZATION plan inline under its
+    InMemoryRelation node; counting source scans without stripping
+    those subtrees double-counts work the cache already paid for."""
+    out, skip_indent = [], None
+    for line in plan.splitlines():
+        indent = len(line) - len(line.lstrip(" :+-*()0123456789"))
+        if skip_indent is not None:
+            if indent > skip_indent or not line.strip():
+                continue
+            skip_indent = None
+        if "InMemoryRelation" in line:
+            skip_indent = indent
+            continue
+        out.append(line)
+    return "\n".join(out)
 
 
 def test_rfm_scores_correct_without_exchange_reuse(spark):

@@ -1,7 +1,8 @@
 """Write-path tests: a mutate batch is one driver-written parquet file
 in exactly the cell schema with no Spark job, segments publish by
 rename, minor compaction reads with the explicit cell schema, the
-writer lock survives a dead holder, and vacuum tolerates crashed
+writer lock survives a dead holder, a writer killed at any commit point
+leaves a table the next writer commits to, and vacuum tolerates crashed
 writers' temp files."""
 
 import os
@@ -203,3 +204,74 @@ def test_vacuum_removes_stray_temp_manifests(store):
     assert os.listdir(mdir) == ["v2.json"]
     assert _cellset(t.read()) == {("r1", "f", "q", 11, "v2"),
                                   ("r1", "f", "q", 10, "v1")}
+
+
+# a plain Python child (no JVM) that runs one blind-put mutate and dies
+# with os._exit(9) right after the named commit point: the segment
+# rename, the vN.json write, or the HEAD swap
+_CRASH_CHILD = """
+import os, sys
+sys.path.insert(0, {repo!r})
+from hbase_snapshot_spark import table as T
+
+point = {point!r}
+rename, write_json = os.rename, T.write_json_atomic
+
+def crash_rename(src, dst):
+    rename(src, dst)
+    if point == "segment" and os.path.basename(dst).startswith("seg-"):
+        os._exit(9)
+
+def crash_write_json(path, obj):
+    write_json(path, obj)
+    d, name = os.path.split(path)
+    if ((point == "manifest" and os.path.basename(d) == "manifests")
+            or (point == "head" and name == "HEAD.json")):
+        os._exit(9)
+
+os.rename, T.write_json_atomic = crash_rename, crash_write_json
+T.TableStore(None, {base!r}).table({name!r}).mutate(
+    [T.Put(r).add("f", "q", "c-" + r, ts=5) for r in {rows!r}])
+"""
+
+
+@pytest.fixture(scope="module")
+def crash_table(spark, tmp_path_factory):
+    store = TableStore(spark, str(tmp_path_factory.mktemp("crash") / "tables"))
+    t = _mk(store, "crash")
+    t.mutate([Put(f"base{i}").add("f", "q", f"b{i}", ts=1) for i in range(3)])
+    return t
+
+
+@pytest.mark.parametrize("point", ["segment", "manifest", "head"])
+def test_writer_killed_at_commit_point(crash_table, point):
+    """A writer killed at a commit point never wedges or corrupts the
+    table: the next writer commits, the read is the pre-crash read plus
+    exactly the committed batches, and vacuum removes the orphan."""
+    t = crash_table
+    pre = _cellset(t.read())
+    crash_rows = [f"{point}-crash{i}" for i in range(2)]
+    child = subprocess.run(
+        [sys.executable, "-c", _CRASH_CHILD.format(
+            repo=REPO, point=point, base=t.store.base_path, name=t.name,
+            rows=crash_rows)],
+        timeout=120)
+    assert child.returncode == 9
+
+    segdir = os.path.join(t.dir, "segments")
+    orphans = sorted(set(os.listdir(segdir)) - set(t.manifest()["segments"]))
+    committed = point == "head"
+    assert len(orphans) == (0 if committed else 1), orphans
+    # only the vN.json crash leaves a manifest past HEAD behind
+    ahead = os.path.join(t.dir, "manifests", f"v{t.manifest()['version'] + 1}.json")
+    assert os.path.exists(ahead) == (point == "manifest")
+
+    v = t.mutate([Put(f"{point}-next").add("f", "q", "n", ts=7)])
+    assert t.manifest()["version"] == v
+    want = pre | {(f"{point}-next", "f", "q", 7, "n")}
+    if committed:
+        want |= {(r, "f", "q", 5, "c-" + r) for r in crash_rows}
+    assert _cellset(t.read()) == want
+
+    assert t.vacuum() == orphans
+    assert _cellset(t.read()) == want
