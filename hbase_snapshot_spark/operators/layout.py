@@ -33,6 +33,12 @@ DataFrame with two pinned caches (the input + the ranked-keys range
 exchange) — wrap the consume in ``rank_cache_scope()`` or use
 :func:`zorder_write`, which writes inside a scope and releases them
 deterministically.
+
+File skipping: :func:`write_skipping_manifest` publishes per-file
+min/max from the parquet footers, and :func:`prune_files_ranges` is
+the one pruner over it — the table's scan planner calls it directly,
+:func:`read_pruned` through :func:`prune_files` (its per-column
+intersection), so every reader applies one set of soundness rules.
 """
 
 from __future__ import annotations
@@ -376,97 +382,59 @@ def write_skipping_manifest(path: str, cols: list[str]) -> dict:
 def prune_files(manifest: dict, bounds: dict) -> list[str]:
     """File names whose recorded [min, max] of EVERY bounded column
     intersects the requested ``bounds`` (col -> (lo, hi); either side
-    None = unbounded).  A file with null stats on a bounded column is
-    KEPT (pruning must never drop a file it cannot rule out).
-
-    NaN soundness (r12 review): parquet footer min/max EXCLUDE NaN
-    while Spark orders NaN GREATER than every double — so for a
-    float-statted column a lower-bound-only predicate (``hi is None``)
-    can be satisfied by NaN rows the stats cannot see, and pruning on
-    it would drop rows a full scan + filter returns.  Such columns are
-    skipped (file kept).  With ``hi`` set the residual ``c <= hi``
-    excludes NaN on the full-scan side too, so normal pruning is
-    sound."""
-    keep = []
-    for fname, stats in manifest["files"].items():
-        match = True
-        for col, (lo, hi) in bounds.items():
-            st = stats.get(col)
-            if st is None or st[0] is None or st[1] is None:
-                continue                      # unknown: cannot rule out
-            smin, smax = _decode_stat(st[0]), _decode_stat(st[1])
-            is_float = isinstance(smin, float) or isinstance(smax, float)
-            if is_float and hi is None:
-                continue                      # NaN rows invisible to stats
-            # guard the PAIRS the prune actually compares (smin>hi,
-            # smax<lo) — r13 shipped the (smin,lo)/(smax,hi) pairing,
-            # so a manifest whose min and max carry DIFFERENT types
-            # (corrupt or hand-edited) could pass the guard yet
-            # TypeError mid-prune (r13 advice)
-            if not _comparable_bound(smin, hi) or not _comparable_bound(
-                    smax, lo):
-                continue                      # type drift: cannot rule out
-            if (hi is not None and smin > hi) or (
-                    lo is not None and smax < lo):
-                match = False
-                break
-        if match:
-            keep.append(fname)
+    None = unbounded) — the per-column intersection of
+    :func:`prune_files_ranges`, which holds the soundness rules."""
+    keep = set(manifest["files"])
+    for col, rng in bounds.items():
+        keep &= set(prune_files_ranges(manifest, col, [rng]))
     return sorted(keep)
 
 
-def _comparable_bound(stat, bound) -> bool:
-    """True when ``stat > bound`` / ``stat < bound`` is a meaningful
-    total-order comparison — a str bound against a bytes-statted column
-    (or vice versa) must KEEP the file, never TypeError mid-prune.
-    Bool stats never prune (uniform rule with prune_files_ranges —
-    bool is an int subclass, so Python would happily 'compare' them,
-    but a bool-statted column is a pathological key and the two entry
-    points must apply identical soundness rules)."""
-    if bound is None:
-        return True
-    if isinstance(stat, bool) or isinstance(bound, bool):
-        return False
-    if isinstance(stat, (int, float)) and isinstance(bound, (int, float)):
-        return True
-    return isinstance(stat, type(bound)) or isinstance(bound, type(stat))
-
-
 def prune_files_ranges(manifest: dict, col: str, ranges: list) -> list[str]:
-    """Multi-range variant of :func:`prune_files` for ONE column: file
-    names whose recorded [min, max] intersects ANY of the closed
-    ``ranges`` (list of (lo, hi); either side None = unbounded).  This
-    is the scan planner's shape — a batched point-get is 1000
-    zero-width ranges, a multi-range scan is 100 of them — and a naive
-    files × ranges sweep is O(F·R); instead ranges are sorted by lo
-    with a prefix-max over hi (classic interval stabbing), so each
-    file costs one bisect: O((F + R) log R) driver-side, which holds
-    at millions of files.
+    """The engine's one file pruner: file names whose recorded
+    [min, max] of ``col`` intersects ANY of the closed ``ranges`` (list
+    of (lo, hi); either side None = unbounded).  This is the scan
+    planner's shape — a batched point-get is 1000 zero-width ranges, a
+    multi-range scan is 100 of them — and a naive files × ranges sweep
+    is O(F·R); instead ranges are sorted by lo with a prefix-max over hi
+    (classic interval stabbing), so each file costs one bisect:
+    O((F + R) log R) driver-side, which holds at millions of files.
 
-    Same soundness rules as prune_files: null/absent stats keep the
-    file, float-statted columns never prune a lower-bound-only range
-    (NaN invisibility), incomparable bound types keep the file."""
+    Soundness rules — a file is kept whenever its stats cannot rule it
+    out:
+
+    * null/absent stats never prune;
+    * bool stats or bounds never prune (bool is an int subclass, so
+      Python would happily compare them, but a bool-keyed column is a
+      pathological key);
+    * a NaN bound never prunes: Spark orders NaN above every double,
+      so ``c <= NaN`` keeps every non-null row;
+    * incomparable types keep the file (a str bound against bytes
+      stats), and bound types with no total order ACROSS ranges (str
+      next to bytes next to int) keep every file;
+    * NaN (r12 review): parquet footer min/max EXCLUDE NaN while Spark
+      orders NaN GREATER than every double, so a range with ``hi=None``
+      can be satisfied by NaN rows the stats cannot see.  A
+      float-statted file is ruled out only when every range has a
+      ``hi`` — the residual ``c <= hi`` then drops NaN on the full-scan
+      side too."""
     import bisect as _bisect
 
-    class _NegInf:
-        def __lt__(self, other):
-            return True
-
-        def __gt__(self, other):
-            return False
-
-    neg_inf = _NegInf()
-    # sort by lo (None = -inf first), prefix-max of hi (None = +inf).
-    # Mixed bound TYPES across ranges (str next to bytes next to int)
-    # have no total order — pruning cannot be sound, so keep every
-    # file rather than TypeError out of a scan
+    files = manifest["files"]
+    # a bool bound, or a NaN bound (no order against the other ranges;
+    # Spark's ``c <= NaN`` holds for every non-null row), keeps all
+    if any(isinstance(b, bool) or (isinstance(b, float) and b != b)
+           for r in ranges for b in r):
+        return sorted(files)
     try:
+        # sort by lo, the open-below (lo=None) ranges first; prefix-max
+        # of hi, with prefix_unbounded[i] = any of norm[0..i] has hi=None
         norm = sorted(
-            ((lo, hi) for lo, hi in ranges),
+            ranges,
             key=lambda r: (r[0] is not None, r[0] if r[0] is not None else 0),
         )
-        los = [lo if lo is not None else neg_inf for lo, _ in norm]
-        # prefix_unbounded[i]: any of ranges[0..i] has hi=None
+        n_open = sum(lo is None for lo, _ in norm)
+        los = [lo for lo, _ in norm[n_open:]]
         prefix_hi: list = []
         prefix_unbounded: list[bool] = []
         best = None
@@ -479,40 +447,26 @@ def prune_files_ranges(manifest: dict, col: str, ranges: list) -> list[str]:
             prefix_hi.append(best)
             prefix_unbounded.append(unbounded)
     except TypeError:
-        return sorted(manifest["files"])
+        return sorted(files)
     keep = []
-    for fname, stats in manifest["files"].items():
+    for fname, stats in files.items():
         st = stats.get(col)
         if st is None or st[0] is None or st[1] is None:
             keep.append(fname)                # unknown: cannot rule out
             continue
         smin, smax = _decode_stat(st[0]), _decode_stat(st[1])
-        if isinstance(smin, (float, bool)) or isinstance(smax, (float, bool)):
-            # floats: NaN rows are invisible to footer stats while
-            # Spark sorts NaN above every double — only fully-bounded
-            # ranges are sound, and mixing per-range soundness into
-            # the sweep is not worth it for a float-keyed scan.
-            # bools: never pruned on (same rule as _comparable_bound).
-            # Keep the file either way.
+        if (isinstance(smin, bool) or isinstance(smax, bool)
+                or (unbounded and (isinstance(smin, float)
+                                   or isinstance(smax, float)))):
             keep.append(fname)
             continue
         try:
             # ranges with lo <= smax: sorted prefix [0, j)
-            j = _bisect.bisect_right(los, smax)
-        except TypeError:
-            keep.append(fname)                # type drift: keep
-            continue
-        if j == 0:
-            continue                          # every range starts above smax
-        if prefix_unbounded[j - 1]:
-            keep.append(fname)
-            continue
-        hi_best = prefix_hi[j - 1]
-        try:
-            if hi_best is not None and hi_best >= smin:
+            j = n_open + _bisect.bisect_right(los, smax)
+            if j and (prefix_unbounded[j - 1] or prefix_hi[j - 1] >= smin):
                 keep.append(fname)
         except TypeError:
-            keep.append(fname)
+            keep.append(fname)                # type drift: keep
     return sorted(keep)
 
 

@@ -9,7 +9,9 @@ semantics of the reference's scan stack:
     (withinOrAfterTimeRange, :157-168 — a delete newer than the queried
     range still masks), the data-cell time-range check is
     ``min <= ts < max`` (io/TimeRange.java:34), and the scan filter runs
-    BEFORE version counting (comment at :182-187).
+    BEFORE version counting (comment at :182-187) — that filter slot is
+    stage 3 of plans/scan_exec.run_scan, between mask() and
+    count_versions().
   - ScanDeleteTracker (regionserver/ScanDeleteTracker.java:41-156):
     DeleteFamily masks family cells with ts <= tombstone ts; DeleteColumn
     masks qualifier cells with ts <= tombstone ts; Delete (exact) masks
@@ -55,7 +57,6 @@ class ResolveSpec:
     time_range: tuple[int, int] | None = None  # [min, max) — Scan.setTimeRange:215
     families: list[str] | None = None       # Scan.addFamily:178
     columns: dict[str, list] | None = None  # family -> qualifiers; Scan.addColumn:192
-    cell_filter: Column | None = None       # compiled filter predicate (pre-version-count)
     family_max_versions: dict[str, int] = field(default_factory=dict)
     family_ttl: dict[str, int] = field(default_factory=dict)  # seconds
     now: int | None = None                  # ms epoch for TTL; injectable for determinism
@@ -321,7 +322,8 @@ def resolve(cells: DataFrame, spec: ResolveSpec | None = None, **kwargs) -> Data
 
     ``cells`` must have columns row, family, qualifier, ts, type, value
     (``seq`` optional; synthesized as 0 when absent).  Returns the same
-    columns, restricted to visible Put cells.
+    columns, restricted to visible Put cells.  A read with a scan filter
+    goes through ``client.Table.scan`` (the filter slot).
     """
     if spec is None:
         spec = ResolveSpec(**kwargs)
@@ -334,11 +336,6 @@ def resolve(cells: DataFrame, spec: ResolveSpec | None = None, **kwargs) -> Data
 
     live = mask(cells, spec)
     live = project_columns(live, spec)
-
-    # -- scan filter BEFORE version counting (ScanQueryMatcher.java:182-187)
-    if spec.cell_filter is not None:
-        live = live.filter(spec.cell_filter)
-
     live = count_versions(live, spec)
     return live.select(*out_cols)
 

@@ -5,7 +5,6 @@ from hbase_snapshot_spark.sources.tools import (
     import_tsv,
     melt,
     bulk_load,
-    row_count,
     unmelt,
 )
 from hbase_snapshot_spark.sources.warc import (

@@ -7,8 +7,11 @@ loops.  ``melt`` is one scan + explode (column-pruned by Catalyst);
 ``bulk_load`` is repartitionByRange + sortWithinPartitions + write,
 which is literally the TotalOrderPartitioner + KeyValueSortReducer
 pipeline (mapreduce/HFileOutputFormat.java:66, writePartitions:183,
-KeyValueSortReducer.java:35); ``import_tsv`` reads CSV with
-DROPMALFORMED matching the skip-bad-lines counter.
+KeyValueSortReducer.java:35), and its output always carries the ``row``
+bloom and the row/ts/type skipping manifest; ``import_tsv`` reads CSV
+with DROPMALFORMED matching the skip-bad-lines counter.  Row counting
+(RowCounter) is ``client.Table.row_count``, which applies the
+descriptor caps and file pruning.
 """
 
 from __future__ import annotations
@@ -150,35 +153,7 @@ def copy_table(
     return dst_table.append_cells(resolve(src_cells, spec=spec))
 
 
-def row_count(cells: DataFrame, approx: bool = False) -> int:
-    """mapreduce/RowCounter.java:40-117 — rows with ≥1 visible cell.
-    The FirstKeyOnlyFilter pushdown becomes a distinct on row keys;
-    ``approx`` swaps in approx_count_distinct for the 100 TB cheap path."""
-    visible = resolve(cells, spec=ResolveSpec(max_versions=1))
-    if approx:
-        return visible.agg(F.approx_count_distinct("row").alias("n")).collect()[0].n
-    return visible.select("row").distinct().count()
-
-
-ROWCOL_SEP = "\x1f"
-
-
-def rowcol_key(row: Column, family: Column, qualifier: Column) -> Column:
-    """the ROWCOL bloom key — row + column concatenated
-    (StoreFile.BloomType:93-105: ROWCOL blooms hash row+qualifier so
-    point-COLUMN gets can skip files, not just point-row gets)."""
-    return F.concat_ws(ROWCOL_SEP, row, family, qualifier)
-
-
-def bulk_load(
-    cells: DataFrame,
-    out_path: str,
-    num_partitions: int = 32,
-    row_bloom: bool = True,
-    bloom_ndv: int = 1_000_000,
-    bloom: str = "ROW",
-    stats_manifest: bool = True,
-) -> None:
+def bulk_load(cells: DataFrame, out_path: str, num_partitions: int = 32) -> None:
     """The HFileOutputFormat bulk-load pipeline
     (mapreduce/HFileOutputFormat.java:66 + SimpleTotalOrderPartitioner +
     KeyValueSortReducer): range-partition by row, sort within partitions
@@ -187,85 +162,51 @@ def bulk_load(
     ``table.append_cells`` / a manifest add — metadata-only, no
     region-boundary re-splitting needed.
 
-    ``row_bloom`` writes a parquet bloom filter on the row column — the
-    analogue of the reference's ROW bloom (StoreFile.BloomType:93-105,
+    The row column always carries a parquet bloom filter — the analogue
+    of the reference's ROW bloom (StoreFile.BloomType:93-105,
     shouldSeek:991): point gets skip row groups whose bloom rejects the
     key, on top of the min/max pruning the sort already provides.
 
-    ``bloom="ROWCOL"`` additionally materializes the composite
-    ``_rc = row||family||qualifier`` column with its own bloom — the
-    ROWCOL variant: a point-COLUMN get filtering on ``_rc`` (see
-    ``bloom_point_get``) skips row groups that contain the row but not
-    the column.  The aux column lives only in the stored file;
-    ``StoredTable.cells()`` projects it away.
-
-    ``stats_manifest`` publishes the per-file ``row`` min/max skipping
-    manifest next to the data (operators/layout.py — one footer pass,
+    The per-file ``row``/``ts``/``type`` skipping manifest is always
+    published next to the data (operators/layout.py — one footer pass,
     no data pages): the output is row-sorted, so per-file row ranges
     are disjoint and tight, and the engine's scan planner
     (StoredTable.cells_for_ranges) prunes the FILE LIST driver-side
     before Spark plans — at 100 TB that is the difference between
-    opening millions of footers and opening none for a point get.
-    Disable only when the driver cannot open() the output files."""
-    df = cells
-    if bloom == "ROWCOL":
-        df = df.withColumn(
-            "_rc", rowcol_key(F.col("row"), F.col("family"), F.col("qualifier"))
-        )
-    w = (
-        df.repartitionByRange(num_partitions, "row")
+    opening millions of footers and opening none for a point get.  An
+    ``out_path`` the driver cannot list skips it with a warning."""
+    from hbase_snapshot_spark.operators.layout import write_skipping_manifest
+
+    (
+        cells.repartitionByRange(num_partitions, "row")
         .sortWithinPartitions(
             "row", "family", "qualifier", F.col("ts").desc(), F.col("seq").desc()
         )
         .write
+        .option("parquet.bloom.filter.enabled#row", "true")
+        .option("parquet.bloom.filter.expected.ndv#row", "1000000")
+        .parquet(out_path)
     )
-    if row_bloom:
-        w = w.option("parquet.bloom.filter.enabled#row", "true").option(
-            "parquet.bloom.filter.expected.ndv#row", str(bloom_ndv)
-        )
-    if bloom == "ROWCOL":
-        w = w.option("parquet.bloom.filter.enabled#_rc", "true").option(
-            "parquet.bloom.filter.expected.ndv#_rc", str(bloom_ndv)
-        )
-    w.parquet(out_path)
-    if stats_manifest:
-        from hbase_snapshot_spark.operators.layout import write_skipping_manifest
+    try:
+        # row min/max for key-range pruning; ts min/max for
+        # time-range / TTL pruning (TimeRangeTracker parity —
+        # regionserver/TimeRangeTracker.java:147 tracks per-HFile ts
+        # bounds that StoreFile.Reader.shouldSeek:991 consults);
+        # type min/max prove a delete-free segment (r15 — the
+        # per-HFile "no deletes" stat: StoredTable._files lets
+        # mask() skip its tombstone windows on such tables)
+        write_skipping_manifest(out_path, ["row", "ts", "type"])
+    except OSError as e:
+        # a URI-schemed / non-driver-listable out_path (hdfs://,
+        # s3a://) is perfectly valid for the WRITE; the manifest is
+        # a driver-side optimization — skip it rather than crash
+        # AFTER the expensive write completed (r13 advice)
+        import warnings
 
-        try:
-            # row min/max for key-range pruning; ts min/max for
-            # time-range / TTL pruning (TimeRangeTracker parity —
-            # regionserver/TimeRangeTracker.java:147 tracks per-HFile ts
-            # bounds that StoreFile.Reader.shouldSeek:991 consults);
-            # type min/max prove a delete-free segment (r15 — the
-            # per-HFile "no deletes" stat: StoredTable._files lets
-            # mask() skip its tombstone windows on such tables)
-            write_skipping_manifest(out_path, ["row", "ts", "type"])
-        except OSError as e:
-            # a URI-schemed / non-driver-listable out_path (hdfs://,
-            # s3a://) is perfectly valid for the WRITE; the manifest is
-            # a driver-side optimization — skip it rather than crash
-            # AFTER the expensive write completed (r13 advice)
-            import warnings
-
-            warnings.warn(
-                f"bulk_load: skipping stats manifest for {out_path!r} "
-                f"(not driver-listable: {e}); reads stay correct, just "
-                f"unpruned", RuntimeWarning)
-
-
-def bloom_point_get(
-    spark: SparkSession, path: str, row, family: str, qualifier
-) -> DataFrame:
-    """point-column read against a ROWCOL bulk_load output — the
-    StoreFile.Reader.shouldSeek:991 path: the ``_rc`` equality predicate
-    reaches the parquet scan, so row groups whose ROWCOL bloom rejects
-    the (row, column) pair are skipped without decoding."""
-    key = f"{row}{ROWCOL_SEP}{family}{ROWCOL_SEP}{qualifier}"
-    return (
-        spark.read.parquet(path)
-        .filter(F.col("_rc") == F.lit(key))
-        .drop("_rc")
-    )
+        warnings.warn(
+            f"bulk_load: skipping stats manifest for {out_path!r} "
+            f"(not driver-listable: {e}); reads stay correct, just "
+            f"unpruned", RuntimeWarning)
 
 
 def region_partition_id(row: Column, boundaries: list) -> Column:

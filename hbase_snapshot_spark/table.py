@@ -248,6 +248,7 @@ class TableStore:
         """HBaseAdmin.snapshot:899 at store scope: freeze the table's
         current manifest + hard-link its segments under
         {base}/.snapshot/{snapshot_name}."""
+        _check_snapshot_name(snapshot_name)
         sd = os.path.join(self._snap_base(), snapshot_name)
         if os.path.exists(sd):
             raise TableExistsError(f"snapshot {snapshot_name}")
@@ -287,14 +288,7 @@ class TableStore:
             shutil.rmtree(tmp, ignore_errors=True)
 
     def list_snapshots(self) -> list[str]:
-        base = self._snap_base()
-        if not os.path.isdir(base):
-            return []
-        return sorted(
-            n for n in os.listdir(base)
-            if not n.startswith(".tmp-")
-            and os.path.isfile(os.path.join(base, n, "snapshotinfo.json"))
-        )
+        return _published_snapshots(self._snap_base())
 
     def snapshot_descriptor(self, snapshot_name: str) -> dict:
         """SnapshotDescriptor surface: name, table, creationTime +
@@ -398,6 +392,27 @@ _SKIP_MANIFEST_CACHE_CAP = 256
 def _read_json(path: str):
     with open(path) as f:
         return json.load(f)
+
+
+def _check_snapshot_name(name: str) -> None:
+    """a snapshot name is one plain directory entry under .snapshot:
+    never a path, and never dot-led (``..`` is the table's own dir,
+    ``.tmp-`` is an unpublished snapshot)"""
+    if (not isinstance(name, str) or not name or name.startswith(".")
+            or os.path.basename(name) != name):
+        raise ValueError(f"Illegal snapshot name {name!r}")
+
+
+def _published_snapshots(base: str) -> list[str]:
+    """the snapshots under ``base`` a reader may see: renamed into
+    place (no ``.tmp-`` dir) and holding their snapshotinfo.json"""
+    if not os.path.isdir(base):
+        return []
+    return sorted(
+        n for n in os.listdir(base)
+        if not n.startswith(".tmp-")
+        and os.path.isfile(os.path.join(base, n, "snapshotinfo.json"))
+    )
 
 
 _SKIP_MANIFEST_LOCK = threading.Lock()
@@ -590,10 +605,7 @@ class StoredTable:
         without a manifest contributes ALL its files, a file whose
         stats cannot rule the ranges out is kept, and the caller still
         applies its own row/time predicates to the result."""
-        from hbase_snapshot_spark.operators.layout import (
-            prune_files,
-            prune_files_ranges,
-        )
+        from hbase_snapshot_spark.operators.layout import prune_files_ranges
 
         def put_only(stats):
             st = stats.get("type")
@@ -614,7 +626,7 @@ class StoredTable:
             if ranges and "row" in cols:
                 keep &= set(prune_files_ranges(skip, "row", ranges))
             if ts_lo is not None and "ts" in cols:
-                keep &= set(prune_files(skip, {"ts": (ts_lo, None)}))
+                keep &= set(prune_files_ranges(skip, "ts", [(ts_lo, None)]))
             pruned_any = pruned_any or len(keep) < len(skip["files"])
             all_put = all_put and "type" in cols and all(
                 put_only(skip["files"][f]) for f in keep)
@@ -627,8 +639,8 @@ class StoredTable:
         if not paths:
             return self.spark.createDataFrame([], schema=schema), all_put
         # explicit cell schema: no schema-inference job per read, and an
-        # adopted bulk segment's aux pruning columns (e.g. the ROWCOL
-        # bloom key) never leak into the logical cell stream
+        # adopted directory's extra columns never leak into the logical
+        # cell stream
         return self.spark.read.schema(schema).parquet(*paths), all_put
 
     def _source(self, m: dict, spec: ResolveSpec,
@@ -1154,8 +1166,8 @@ class StoredTable:
                 return self._head_version()
             paths = [os.path.join(self.dir, "segments", s) for s in merge]
             # explicit cell schema, as in _files: no schema-inference
-            # job, and a bulk segment's aux columns (the ROWCOL ``_rc``
-            # key) never carry into the compacted segment
+            # job, and an adopted directory's extra columns never carry
+            # into the compacted segment
             compacted = self.spark.read.schema(
                 cell_schema(binary=m["binary"])).parquet(*paths)
         else:
@@ -1286,26 +1298,37 @@ class StoredTable:
     def snapshot(self, name: str) -> None:
         """HBaseAdmin.snapshot:899 — metadata-only commit: freeze the
         current manifest under .snapshot/<name>/ (zero data copied; the
-        segment files are shared, protected from vacuum by reference)."""
-        sd = self._snap_dir(name)
-        if os.path.exists(sd):
+        segment files are shared, protected from vacuum by reference).
+
+        Published like TableStore.snapshot: built in a hidden
+        ``.tmp-`` dir and renamed into place, so a writer killed midway
+        leaves no listed half-snapshot that would wedge vacuum and the
+        name (vacuum reaps the temp dir)."""
+        _check_snapshot_name(name)
+        if name in self.list_snapshots():
             raise TableExistsError(f"snapshot {name}")
-        os.makedirs(sd)
         m = self.manifest()
         info = dict(m)
         info["snapshot_name"] = name
         info["snapshot_table"] = self.name
         info["created_version"] = m["version"]
-        write_json_atomic(os.path.join(sd, "snapshotinfo.json"), info)
+        tmp = self._snap_dir(f".tmp-{name}-{uuid.uuid4().hex[:8]}")
+        os.makedirs(tmp)
+        write_json_atomic(os.path.join(tmp, "snapshotinfo.json"), info)
+        # an unlisted dir under the name is a pre-rename-publishing
+        # crash's leftover (we hold the writer lock): replace it
+        shutil.rmtree(self._snap_dir(name), ignore_errors=True)
+        os.rename(tmp, self._snap_dir(name))
 
     def list_snapshots(self) -> list[str]:
-        base = os.path.join(self.dir, SNAPSHOT_DIR)
-        if not os.path.isdir(base):
-            return []
-        return sorted(os.listdir(base))
+        return _published_snapshots(os.path.join(self.dir, SNAPSHOT_DIR))
 
     def snapshot_manifest(self, name: str) -> dict:
-        return _read_json(os.path.join(self._snap_dir(name), "snapshotinfo.json"))
+        try:
+            return _read_json(
+                os.path.join(self._snap_dir(name), "snapshotinfo.json"))
+        except FileNotFoundError:
+            raise TableNotFoundError(f"snapshot {name}") from None
 
     @_locked
     def restore_snapshot(self, name: str) -> int:
@@ -1325,6 +1348,8 @@ class StoredTable:
     def delete_snapshot(self, name: str) -> None:
         """HBaseAdmin.deleteSnapshot:948 — drop the manifest; files are
         reclaimed by vacuum() once unreferenced."""
+        if name not in self.list_snapshots():
+            raise TableNotFoundError(f"snapshot {name}")
         shutil.rmtree(self._snap_dir(name))
 
     def clone_to(self, store: TableStore, new_name: str, snapshot: str,
@@ -1412,6 +1437,11 @@ class StoredTable:
             if seg not in refs:
                 shutil.rmtree(os.path.join(segdir, seg))
                 removed.append(seg)
+        # crashed snapshots' unpublished temp dirs (we hold the lock)
+        snapdir = os.path.join(self.dir, SNAPSHOT_DIR)
+        for d in os.listdir(snapdir) if os.path.isdir(snapdir) else ():
+            if d.startswith(".tmp-"):
+                shutil.rmtree(os.path.join(snapdir, d), ignore_errors=True)
         # also drop superseded manifest versions and temp leftovers
         head = self._head_version()
         mdir = os.path.join(self.dir, "manifests")

@@ -730,8 +730,9 @@ def test_weird_cache_behaviour(store):
 
 
 def test_all_columns_with_bloom_filter(store, spark, tmp_path):
-    """a ROWCOL-bloomed store file must NOT prune an all-columns
-    multi-version get — all 4 versions come back newest-first."""
+    """a row-bloomed bulk-loaded store file must NOT prune an
+    all-columns multi-version get — all 4 versions come back
+    newest-first."""
     from tests.cells import cells_df, put as mk_put
     from hbase_snapshot_spark.sources.tools import bulk_load
 
@@ -741,7 +742,7 @@ def test_all_columns_with_bloom_filter(store, spark, tmp_path):
         mk_put("row:0", "family", "column:0", ts, f"value-version-{ts}")
         for ts in (1, 2, 3, 4)
     ])
-    bulk_load(cells, seg, num_partitions=1, bloom="ROWCOL")
+    bulk_load(cells, seg, num_partitions=1)
     t.adopt_segment(seg)
 
     got = t.client().get(Get("row:0", max_versions=None)).collect()
@@ -752,8 +753,8 @@ def test_all_columns_with_bloom_filter(store, spark, tmp_path):
 
 
 def test_delete_row_with_bloom_filter(store, spark, tmp_path):
-    """HBASE-2823: a whole-row delete over a ROWCOL-bloomed store file
-    must mask the row for point-column gets."""
+    """HBASE-2823: a whole-row delete over a row-bloomed bulk-loaded
+    store file must mask the row for point-column gets."""
     from tests.cells import cells_df, put as mk_put
     from hbase_snapshot_spark.sources.tools import bulk_load
 
@@ -761,7 +762,7 @@ def test_delete_row_with_bloom_filter(store, spark, tmp_path):
     seg = str(tmp_path / "delbloomseg")
     bulk_load(cells_df(spark, [
         mk_put("row1", "familyName", "col1", 1, "SomeRandomValue")
-    ]), seg, num_partitions=1, bloom="ROWCOL")
+    ]), seg, num_partitions=1)
     t.adopt_segment(seg)
     assert _size(t, "row1", columns={"familyName": ["col1"]}) == 1
 

@@ -344,65 +344,88 @@ def test_skipping_manifest_nan_soundness(spark, tmp_path):
     assert [r.p for r in got2.collect()] == ["hi"]
 
 
+def _brute_prune(manifest, col, ranges):
+    """the obvious O(F·R) definition of the pruning rules: a NaN bound
+    keeps every file, null stats and bool stats keep the file, a
+    float-statted file is kept when any range has hi=None (NaN
+    invisibility), else keep on any overlap"""
+    from hbase_snapshot_spark.operators.layout import _decode_stat
+
+    if any(b != b for r in ranges for b in r if b is not None):
+        return sorted(manifest["files"])
+    open_hi = any(hi is None for _, hi in ranges)
+    keep = []
+    for fname, stats in manifest["files"].items():
+        st = stats.get(col)
+        if st is None or st[0] is None or st[1] is None:
+            keep.append(fname)
+            continue
+        smin, smax = _decode_stat(st[0]), _decode_stat(st[1])
+        if isinstance(smin, bool) or isinstance(smax, bool) or (
+                open_hi and (isinstance(smin, float) or isinstance(smax, float))):
+            keep.append(fname)
+            continue
+        for lo, hi in ranges:
+            if (lo is None or smax >= lo) and (hi is None or smin <= hi):
+                keep.append(fname)
+                break
+    return sorted(keep)
+
+
+def _random_stats(rng):
+    kind = rng.random()
+    if kind < 0.15:
+        return [None, None]
+    if kind < 0.2:
+        return [False, True]
+    if kind < 0.35:
+        a = rng.uniform(0, 100)
+        return [a, a + rng.uniform(0, 20)]
+    a = rng.randrange(0, 1000)
+    return [a, a + rng.randrange(0, 100)]
+
+
+def _random_range(rng):
+    lo = None if rng.random() < 0.2 else rng.randrange(0, 1000)
+    kind = rng.random()
+    if kind < 0.2:
+        hi = None
+    elif kind < 0.25:
+        hi = float("nan")
+    elif lo is None:
+        hi = rng.randrange(0, 1000)
+    else:
+        hi = lo + rng.randrange(0, 150)
+    return lo, hi
+
+
 def test_prune_files_ranges_matches_bruteforce():
     """(r13) the interval-stabbing sweep in prune_files_ranges must
     agree with the obvious O(F·R) definition on randomized inputs —
-    including None bounds, zero-width (point) ranges, null-stats files
-    (always kept), float-statted files (always kept: NaN invisibility),
-    and hex-encoded bytes stats against bytes bounds."""
+    including None bounds, zero-width (point) ranges, null-stats and
+    bool-stats files (always kept), float-statted files (kept when any
+    range is open above: NaN invisibility), and hex-encoded bytes stats
+    against bytes bounds."""
     import random
 
-    from hbase_snapshot_spark.operators.layout import (
-        _decode_stat,
-        prune_files_ranges,
-    )
+    from hbase_snapshot_spark.operators.layout import prune_files_ranges
 
     rng = random.Random(13)
-
-    def brute(manifest, col, ranges):
-        keep = []
-        for fname, stats in manifest["files"].items():
-            st = stats.get(col)
-            if st is None or st[0] is None or st[1] is None:
-                keep.append(fname)
-                continue
-            smin, smax = _decode_stat(st[0]), _decode_stat(st[1])
-            if isinstance(smin, float) or isinstance(smax, float):
-                keep.append(fname)
-                continue
-            for lo, hi in ranges:
-                if (lo is None or smax >= lo) and (hi is None or smin <= hi):
-                    keep.append(fname)
-                    break
-        return sorted(keep)
-
     for trial in range(200):
         nf, nr = rng.randrange(1, 12), rng.randrange(1, 15)
-        files = {}
-        for i in range(nf):
-            kind = rng.random()
-            if kind < 0.15:
-                st = [None, None]
-            elif kind < 0.3:
-                a = rng.uniform(0, 100)
-                st = [a, a + rng.uniform(0, 20)]
-            else:
-                a = rng.randrange(0, 1000)
-                st = [a, a + rng.randrange(0, 100)]
-            files[f"part-{i}.parquet"] = {"k": st}
+        files = {f"part-{i}.parquet": {"k": _random_stats(rng)}
+                 for i in range(nf)}
         man = {"columns": ["k"], "files": files}
-        ranges = []
-        for _ in range(nr):
-            lo = None if rng.random() < 0.2 else rng.randrange(0, 1000)
-            if rng.random() < 0.2:
-                hi = None
-            elif lo is None:
-                hi = rng.randrange(0, 1000)
-            else:
-                hi = lo + rng.randrange(0, 150)
-            ranges.append((lo, hi))
-        assert prune_files_ranges(man, "k", ranges) == brute(man, "k", ranges), (
-            trial, man, ranges)
+        ranges = [_random_range(rng) for _ in range(nr)]
+        assert prune_files_ranges(man, "k", ranges) == _brute_prune(
+            man, "k", ranges), (trial, man, ranges)
+
+    # a fully upper-bounded range rules a float-statted file out
+    fman = {"columns": ["k"], "files": {"a.parquet": {"k": [1.0, 2.0]},
+                                        "b.parquet": {"k": [50.0, 60.0]}}}
+    assert prune_files_ranges(fman, "k", [(5.0, 70.0)]) == ["b.parquet"]
+    assert prune_files_ranges(fman, "k", [(5.0, 70.0), (80.0, None)]) == [
+        "a.parquet", "b.parquet"]
 
     # bytes stats round-trip through the hex encoding
     man = {"columns": ["k"], "files": {
@@ -432,6 +455,77 @@ def test_prune_files_ranges_mixed_bound_types_keep_all():
         "a.parquet", "b.parquet"]
     assert prune_files_ranges(man, "k", [(b"x", None), (5, 7), (None, "z")]
                               ) == ["a.parquet", "b.parquet"]
+
+
+def test_prune_bool_and_nan_bounds_never_prune():
+    """bool is an int subclass, so Python compares it with ints; a
+    bool bound or a bool-statted file must still never prune. A NaN
+    bound has no order against the other ranges and Spark's
+    ``c <= NaN`` holds for every non-null row, so it keeps every file."""
+    from hbase_snapshot_spark.operators.layout import (
+        prune_files,
+        prune_files_ranges,
+    )
+
+    man = {"columns": ["k"], "files": {
+        "a.parquet": {"k": [10, 20]},
+        "b.parquet": {"k": [100, 200]},
+        "c.parquet": {"k": [False, True]},
+    }}
+    every = ["a.parquet", "b.parquet", "c.parquet"]
+    assert prune_files_ranges(man, "k", [(True, True)]) == every
+    assert prune_files_ranges(man, "k", [(5, 7), (None, False)]) == every
+    assert prune_files(man, {"k": (False, None)}) == every
+    assert prune_files(man, {"k": (150, 160)}) == ["b.parquet", "c.parquet"]
+    nan = float("nan")
+    fman = {"columns": ["k"], "files": {"a.parquet": {"k": [1.0, 2.0]},
+                                        "b.parquet": {"k": [50.0, 60.0]}}}
+    assert prune_files(fman, {"k": (None, nan)}) == ["a.parquet", "b.parquet"]
+    assert prune_files(fman, {"k": (nan, 70.0)}) == ["a.parquet", "b.parquet"]
+    assert prune_files_ranges(fman, "k", [(5.0, 70.0), (nan, 1.5)]) == [
+        "a.parquet", "b.parquet"]
+
+
+def test_read_pruned_nan_bound_matches_full_scan(spark, tmp_path):
+    """read_pruned under a NaN upper bound returns what the full scan +
+    filter returns: every non-null row, since Spark orders NaN above
+    every double."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hbase_snapshot_spark.operators.layout import (
+        read_pruned,
+        write_skipping_manifest,
+    )
+
+    d = tmp_path / "nanbound"
+    d.mkdir()
+    for i, vals in enumerate(([1.0, 2.0], [50.0, 60.0])):
+        pq.write_table(pa.table({"c": vals}), str(d / f"part-{i}.parquet"))
+    write_skipping_manifest(str(d), ["c"])
+    got = read_pruned(spark, str(d), {"c": (None, float("nan"))})
+    want = spark.read.parquet(str(d)).filter(F.col("c") <= float("nan"))
+    assert sorted(r.c for r in got.collect()) == \
+           sorted(r.c for r in want.collect()) == [1.0, 2.0, 50.0, 60.0]
+
+
+def test_prune_files_is_the_per_column_intersection():
+    """prune_files(m, bounds) keeps exactly the files every bounded
+    column's brute-force definition keeps."""
+    import random
+
+    from hbase_snapshot_spark.operators.layout import prune_files
+
+    rng = random.Random(7)
+    for trial in range(200):
+        files = {f"part-{i}.parquet": {c: _random_stats(rng) for c in "ab"}
+                 for i in range(rng.randrange(1, 12))}
+        man = {"columns": ["a", "b"], "files": files}
+        bounds = {c: _random_range(rng) for c in "ab" if rng.random() < 0.7}
+        want = set(files)
+        for col, rng_ in bounds.items():
+            want &= set(_brute_prune(man, col, [rng_]))
+        assert prune_files(man, bounds) == sorted(want), (trial, man, bounds)
 
 
 def test_zorder_single_pass_one_rank_exchange(spark):

@@ -224,16 +224,21 @@ def test_qualifier_projection_keeps_delete_tracking(spark):
 def test_cell_filter_before_version_count(spark):
     # ScanQueryMatcher.java:182-187 — the filter must not let a discarded
     # newer version consume the maxVersions quota.
-    from pyspark.sql import functions as F
+    from hbase_snapshot_spark.client import Scan, Table
+    from hbase_snapshot_spark.filters import (
+        BinaryComparator,
+        CompareOp,
+        ValueFilter,
+    )
 
     df = cells_df(spark, [
         put("r1", "f", "q", 30, "skipme"),
         put("r1", "f", "q", 20, "keep20"),
         put("r1", "f", "q", 10, "keep10"),
     ])
-    out = visible_set(
-        resolve(df, max_versions=1, cell_filter=F.col("value") != "skipme")
-    )
+    out = visible_set(Table(df).scan(Scan(
+        max_versions=1,
+        filter=ValueFilter(CompareOp.NOT_EQUAL, BinaryComparator("skipme")))))
     assert out == {("r1", "f", "q", 20, "keep20")}
 
 

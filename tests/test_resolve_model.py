@@ -1,6 +1,8 @@
-"""Model-based property test: resolve() vs a direct Python transcription
-of the reference's per-cell scan loop (ScanQueryMatcher.match +
-ScanDeleteTracker + version tracker), on randomized cell streams.
+"""Model-based property test: resolve() and the client scan path
+(client.Table.scan, whose filter slot is run_scan's stage 3) vs a direct
+Python transcription of the reference's per-cell scan loop
+(ScanQueryMatcher.match + ScanDeleteTracker + version tracker), on
+randomized cell streams.
 
 The Python model walks cells in the exact KeyValue total order
 (row asc, family asc, qualifier asc, ts desc, type desc, seq desc —
@@ -13,6 +15,13 @@ import random
 
 import pytest
 
+from hbase_snapshot_spark.client import Scan, Table
+from hbase_snapshot_spark.filters import (
+    BinaryComparator,
+    CompareOp,
+    QualifierFilter,
+    TimestampsFilter,
+)
 from hbase_snapshot_spark.model import KeyType
 from hbase_snapshot_spark.resolve import ResolveSpec, resolve
 from tests.cells import cells_df
@@ -20,7 +29,7 @@ from tests.cells import cells_df
 
 def model_resolve(cells, spec: ResolveSpec, model_pred=None):
     """imperative transcription of the scan stack; ``model_pred`` is the
-    Python twin of spec.cell_filter (fn(row,fam,qual,ts,val) -> bool)"""
+    Python twin of the scan filter (fn(row,fam,qual,ts,val) -> bool)"""
     ttl_cut = {}
     for fam, ttl_s in (spec.family_ttl or {}).items():
         ttl_cut[fam] = (spec.now or 0) - ttl_s * 1000
@@ -80,7 +89,7 @@ def model_resolve(cells, spec: ResolveSpec, model_pred=None):
         ):
             continue
         # filter slot (cell predicate), before version counting —
-        # the caller passes the model twin of spec.cell_filter
+        # the caller passes the model twin of the scan filter
         if model_pred is not None and not model_pred(row, fam, qual, ts, val):
             continue
         # qualifier projection (column tracker, after filter slot).
@@ -128,50 +137,75 @@ def _random_cells(rng, n_rows=3, n_quals=3, n_ts=4):
 
 
 def _specs():
-    """(spec, model twin of spec.cell_filter) pairs — built lazily
-    because Column construction needs an active SparkContext.  The cell
+    """(spec, scan filter, model twin of the filter) triples.  The
     filter runs pre-version-count on both sides
     (ScanQueryMatcher.java:182-187)."""
-    from pyspark.sql import functions as F
-
     return [
-        (ResolveSpec(max_versions=1), None),
-        (ResolveSpec(max_versions=1, cell_filter=F.col("qualifier") != "q1"),
+        (ResolveSpec(max_versions=1), None, None),
+        (ResolveSpec(max_versions=1),
+         QualifierFilter(CompareOp.NOT_EQUAL, BinaryComparator("q1")),
          lambda r, f, q, t, v: q != "q1"),
-        (ResolveSpec(max_versions=2, time_range=(15, 41),
-                     cell_filter=F.col("ts") != 20),
+        (ResolveSpec(max_versions=2, time_range=(15, 41)),
+         TimestampsFilter([10, 30, 40]),
          lambda r, f, q, t, v: t != 20),
-        (ResolveSpec(max_versions=2), None),
-        (ResolveSpec(max_versions=None), None),
-        (ResolveSpec(max_versions=None, time_range=(15, 35)), None),
-        (ResolveSpec(max_versions=1, time_range=(20, 41)), None),
-        (ResolveSpec(max_versions=2, families=["f"]), None),
-        (ResolveSpec(max_versions=None, columns={"f": ["q0", "q1"]}), None),
+        (ResolveSpec(max_versions=2), None, None),
+        (ResolveSpec(max_versions=None), None, None),
+        (ResolveSpec(max_versions=None, time_range=(15, 35)), None, None),
+        (ResolveSpec(max_versions=1, time_range=(20, 41)), None, None),
+        (ResolveSpec(max_versions=2, families=["f"]), None, None),
+        (ResolveSpec(max_versions=None, columns={"f": ["q0", "q1"]}), None, None),
         # mixed addFamily + addColumn: g fully, f only q0
         (ResolveSpec(max_versions=1, families=["f", "g"],
-                     columns={"f": ["q0"]}), None),
-        (ResolveSpec(max_versions=2, family_max_versions={"f": 1, "g": 3}), None),
-        (ResolveSpec(max_versions=None, family_ttl={"f": 10}, now=25_000), None),
+                     columns={"f": ["q0"]}), None, None),
+        (ResolveSpec(max_versions=2, family_max_versions={"f": 1, "g": 3}),
+         None, None),
+        (ResolveSpec(max_versions=None, family_ttl={"f": 10}, now=25_000),
+         None, None),
         # everything at once: TTL + time range + family caps + projection
         (ResolveSpec(max_versions=2, time_range=(15, 41),
                      family_max_versions={"g": 1},
                      family_ttl={"f": 10}, now=25_000,
-                     families=["f", "g"], columns={"g": ["q0"]}), None),
+                     families=["f", "g"], columns={"g": ["q0"]}), None, None),
     ]
+
+
+_COLS = ("row", "family", "qualifier", "ts", "value")
+
+
+def _scan(spec: ResolveSpec, flt) -> Scan:
+    return Scan(max_versions=spec.max_versions, time_range=spec.time_range,
+                families=spec.families, columns=spec.columns, filter=flt,
+                family_max_versions=spec.family_max_versions,
+                family_ttl=spec.family_ttl, now=spec.now)
 
 
 @pytest.mark.parametrize("trial", range(8))
 def test_resolve_matches_imperative_model(spark, trial):
+    from pyspark.sql import functions as F
+
     rng = random.Random(1000 + trial)
     cells = _random_cells(rng)
     df = cells_df(spark, cells)
-    for i, (spec, model_pred) in enumerate(_specs()):
-        got = {
-            (r.row, r.family, r.qualifier, r.ts, r.value)
-            for r in resolve(df, spec=spec).collect()
-        }
-        want = model_resolve(cells, spec, model_pred)
-        assert got == want, (
-            f"divergence trial={trial} spec#{i}={spec}\n"
-            f"only-engine={got - want}\nonly-model={want - got}\ncells={cells}"
+    # resolve() has no filter slot: it checks each distinct spec once,
+    # unfiltered; the scan path checks every spec with its filter
+    runs, resolved = [], []
+    for i, (spec, flt, model_pred) in enumerate(_specs()):
+        if spec not in resolved:
+            resolved.append(spec)
+            runs.append((i, "resolve", spec, None, resolve(df, spec=spec),
+                         model_resolve(cells, spec)))
+        runs.append((i, "scan", spec, flt, Table(df).scan(_scan(spec, flt)),
+                     model_resolve(cells, spec, model_pred)))
+    # one Spark job per trial: every run's cells, tagged with its index
+    tagged = runs[0][4].select(F.lit(0).alias("_run"), *_COLS)
+    for k, run in enumerate(runs[1:], 1):
+        tagged = tagged.unionAll(run[4].select(F.lit(k).alias("_run"), *_COLS))
+    got = {k: set() for k in range(len(runs))}
+    for r in tagged.collect():
+        got[r._run].add(tuple(r)[1:])
+    for k, (i, path, spec, flt, _, want) in enumerate(runs):
+        assert got[k] == want, (
+            f"divergence trial={trial} spec#{i}={spec} filter={flt} "
+            f"path={path}\nonly-engine={got[k] - want}\n"
+            f"only-model={want - got[k]}\ncells={cells}"
         )

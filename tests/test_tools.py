@@ -8,6 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from hbase_snapshot_spark.client import Table
 from hbase_snapshot_spark.model import FamilyDescriptor, TableDescriptor
 from hbase_snapshot_spark.sources.tools import (
     bulk_load,
@@ -17,7 +18,6 @@ from hbase_snapshot_spark.sources.tools import (
     import_tsv,
     melt,
     region_partition_id,
-    row_count,
     unmelt,
 )
 from hbase_snapshot_spark.table import Put, TableStore
@@ -89,7 +89,7 @@ def test_row_counter(spark):
         delete_column("r3", "f", "a", 99),
         put("r3", "f", "a", 10, "dead"),
     ])
-    assert row_count(cells) == 2  # r3 fully masked
+    assert Table(cells).row_count() == 2  # r3 fully masked
 
 
 def test_bulk_load_sorted_ranges(spark, tmp_path):
@@ -219,33 +219,6 @@ def test_multi_table_write_single_pass(spark, tmp_path):
     assert acc.value == n  # one evaluation per input row, not n_tables×n
     total = sum(store.table(f"t{k}").read().count() for k in (1, 2, 3))
     assert total == n
-
-
-def test_rowcol_bloom_bulk_load(spark, tmp_path):
-    # ROWCOL bloom (StoreFile.BloomType:93-105): a point-column get's
-    # composite-key predicate must reach the parquet scan (PushedFilters)
-    # so the _rc bloom can reject row groups; result equals a plain scan
-    from hbase_snapshot_spark.sources.tools import bloom_point_get, bulk_load
-
-    cells = cells_df(spark, [
-        put(f"r{i:03d}", "f", q, 10, f"{i}-{q}")
-        for i in range(50) for q in ("qa", "qb")
-    ])
-    out = str(tmp_path / "rowcol")
-    bulk_load(cells, out, num_partitions=2, bloom="ROWCOL")
-
-    got = bloom_point_get(spark, out, "r007", "f", "qb")
-    assert [(r.row, r.qualifier, r.value) for r in got.collect()] == [
-        ("r007", "qb", "7-qb")
-    ]
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan and "_rc" in plan
-    # the aux column never leaks into a table's logical cell stream
-    store = TableStore(spark, str(tmp_path / "rcstore"))
-    t = store.create_table(TableDescriptor("t").add_family(FamilyDescriptor("f")))
-    t.adopt_segment(out)
-    assert "_rc" not in t.cells().columns
-    assert t.cells().count() == 100
 
 
 def test_multi_table_write_seq_tiebreak_and_readonly(spark, tmp_path):

@@ -2,8 +2,9 @@
 in exactly the cell schema with no Spark job, segments publish by
 rename, minor compaction reads with the explicit cell schema, the
 writer lock survives a dead holder, a writer killed at any commit point
-leaves a table the next writer commits to, and vacuum tolerates crashed
-writers' temp files."""
+leaves a table the next writer commits to, a writer killed mid-snapshot
+leaves no listed snapshot, a snapshot name is never a path, and vacuum
+tolerates crashed writers' temp files."""
 
 import os
 import shutil
@@ -14,12 +15,13 @@ import textwrap
 
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from hbase_snapshot_spark.model import FamilyDescriptor, TableDescriptor, cell_schema
 from hbase_snapshot_spark.operators.layout import SKIP_MANIFEST_NAME, _data_files
 from hbase_snapshot_spark.streaming import replicate
-from hbase_snapshot_spark.table import Delete, Put, TableStore
+from hbase_snapshot_spark.table import Delete, Put, TableNotFoundError, TableStore
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -126,17 +128,20 @@ def test_minor_compaction_reads_the_cell_schema(spark, store, tmp_path):
 
     t = _mk(store)
     bulk = str(tmp_path / "bulk")
+    # a prepared dir with one column beyond the cell schema
     bulk_load(cells_df(spark, [put(f"r{i}", "f", "q", 5, f"b{i}")
-                               for i in range(6)]),
-              bulk, num_partitions=2, bloom="ROWCOL")
+                               for i in range(6)]).withColumn("extra", F.lit("x")),
+              bulk, num_partitions=2)
     t.adopt_segment(bulk)
+    schema = cell_schema(binary=False)
+    # the extra column never leaks into the logical cell stream
+    assert t.cells().columns == schema.names
     t.mutate([Put("r1").add("f", "q", "w1", ts=7)])
     t.mutate([Delete("r2").delete_column("f", "q", ts=5),
               Delete("r3")], now=8)
     want = _cellset(t.read())
     t.compact(segments=t.manifest()["segments"])
     (seg,) = t.manifest()["segments"]
-    schema = cell_schema(binary=False)
     for f in _data_files(_seg_dir(t, seg)):
         assert pq.read_schema(f).names == schema.names
     assert [(f.name, f.dataType) for f in spark.read.parquet(
@@ -275,3 +280,61 @@ def test_writer_killed_at_commit_point(crash_table, point):
 
     assert t.vacuum() == orphans
     assert _cellset(t.read()) == want
+
+
+# a plain Python child (no JVM) that snapshots the table and dies with
+# os._exit(9) right after the snapshot's directory under .snapshot/ is
+# created, before its snapshotinfo.json is published
+_SNAPSHOT_CRASH_CHILD = """
+import os, sys
+sys.path.insert(0, {repo!r})
+from hbase_snapshot_spark import table as T
+
+makedirs = os.makedirs
+
+def crash_makedirs(path, *args, **kwargs):
+    makedirs(path, *args, **kwargs)
+    if os.path.basename(os.path.dirname(path)) == T.SNAPSHOT_DIR:
+        os._exit(9)
+
+os.makedirs = crash_makedirs
+T.TableStore(None, {base!r}).table({name!r}).snapshot({snap!r})
+"""
+
+
+def test_writer_killed_mid_snapshot_leaves_no_listed_snapshot(store):
+    t = _mk(store, "snapcrash")
+    t.mutate([Put("r1").add("f", "q", "v1", ts=1)])
+    child = subprocess.run(
+        [sys.executable, "-c", _SNAPSHOT_CRASH_CHILD.format(
+            repo=REPO, base=t.store.base_path, name=t.name, snap="s1")],
+        timeout=120)
+    assert child.returncode == 9
+    assert t.list_snapshots() == []
+    assert t.referenced_segments() == set(t.manifest()["segments"])
+    assert t.vacuum() == []
+    assert os.listdir(os.path.join(t.dir, ".snapshot")) == []
+    t.snapshot("s1")
+    assert t.list_snapshots() == ["s1"]
+    assert t.snapshot_manifest("s1")["segments"] == t.manifest()["segments"]
+    for op in (t.restore_snapshot, t.delete_snapshot, t.snapshot_manifest):
+        with pytest.raises(TableNotFoundError):
+            op("nope")
+
+
+def test_snapshot_name_must_be_one_plain_entry(store):
+    """a snapshot name is never a path: ``..`` would name the table's
+    own directory, ``.`` every snapshot, and a ``.tmp-`` name a
+    snapshot that is never listed. All are refused before the disk is
+    touched, and the table stays whole."""
+    t = _mk(store, "snapname")
+    t.mutate([Put("r1").add("f", "q", "v1", ts=1)])
+    t.snapshot("keep")
+    for bad in ("..", ".", "", ".tmp-x", "a/b", "../x", "/abs"):
+        with pytest.raises(ValueError):
+            t.snapshot(bad)
+        with pytest.raises(ValueError):
+            store.snapshot(bad, t.name)
+    assert t.list_snapshots() == ["keep"]
+    assert store.list_snapshots() == []
+    assert _cellset(t.read()) == {("r1", "f", "q", 1, "v1")}
