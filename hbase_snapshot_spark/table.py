@@ -10,10 +10,11 @@ Re-creates the reference's storage semantics with Spark-native parts:
     MVCC snapshot reads (ReadWriteConsistencyControl.java:31 — readers
     pin a manifest version, writers never mutate files in place).
   - Catalog (-ROOT-/.META.) → the base directory listing.
-  - Compaction (Store.compact:581) → rewrite segments through the
-    resolve kernel: minor keeps tombstones
-    (MinorCompactingStoreScanner.java), major purges masked + expired
-    cells; either swaps the manifest to the compacted segment.
+  - Compaction (Store.compact:581) → minor = a raw sorted merge that
+    keeps tombstones (MinorCompactingStoreScanner.java) — the selected
+    small newest run merges on the driver, the settled bulk segment
+    stays put; major = the resolve kernel purging masked + expired
+    cells.  Either swaps the merged inputs for the compacted segment.
   - Snapshots (SnapshotDescriptor.java:36, HConstants SNAPSHOT_DIR
     ".snapshot") → a snapshot is a frozen manifest copy under
     ``.snapshot/<name>/`` referencing the SAME segment files (zero-copy,
@@ -31,11 +32,13 @@ write path, and what makes checkAndMutate / increment atomic
 
 Scale: segments are plain parquet directories.  A mutation batch is
 driver-resident (the client write buffer), so ``mutate`` writes its
-segment on the driver as ONE pyarrow parquet file — no Spark job.  The
-distributed paths (append_cells, bulk_load, compaction) write through
-Spark: a 1000-executor bulk load writes one segment with thousands of
-files.  Reads are ``spark.read.parquet(seg1, seg2, ...)`` so partition
-pruning, predicate pushdown, and row-group skipping all apply.
+segment on the driver as ONE pyarrow parquet file — no Spark job; so
+does a minor merge, whose input is capped at ``_MINOR_MERGE_BYTES``.
+The distributed paths (append_cells, bulk_load, the whole-table
+``compact()`` and ``compact(major=True)``) write through Spark: a
+1000-executor bulk load writes one segment with thousands of files.
+Reads are ``spark.read.parquet(seg1, seg2, ...)`` so partition pruning,
+predicate pushdown, and row-group skipping all apply.
 """
 
 from __future__ import annotations
@@ -71,6 +74,11 @@ from hbase_snapshot_spark.resolve import ResolveSpec, compose, resolve, ts_floor
 SNAPSHOT_DIR = ".snapshot"  # HConstants.java:152
 _MANIFEST_NAME = re.compile(r"v(\d+)\.json")
 _SEQ_SHIFT = 20  # seq = commit_seq << 20 | intra-batch ordinal
+#: on-disk bytes a driver-side minor merge may read: a larger run skips
+#: its oldest segments (select_minor_compaction), and compact(segments=)
+#: over it raises — a large settled file is rewritten only by the Spark
+#: compactions (HBase's ``hbase.hstore.compaction.max.size`` analogue)
+_MINOR_MERGE_BYTES = 64 << 20
 
 
 class TableExistsError(Exception):
@@ -930,27 +938,42 @@ class StoredTable:
             )
         if not rows:
             return m["version"]
-        commit_seq = m["commit_seq"] + 1
-        base_seq = commit_seq << _SEQ_SHIFT
+        base_seq = (m["commit_seq"] + 1) << _SEQ_SHIFT
         # binary values arrive as bytes/bytearray/memoryview: write bytes
         rows = [(h(r), f, h(q), ts, t, base_seq + o, h(v))
                 for (r, f, q, ts, t, o, v) in rows]
         schema = to_arrow_schema(cell_schema(binary=m["binary"]))
         batch = pa.Table.from_pydict(dict(zip(schema.names, zip(*rows))),
                                      schema=schema)
-        seg = f"seg-{commit_seq:06d}-wal-{uuid.uuid4().hex[:8]}"
+        # WAL segments publish ts/type stats only (_publish_ts_manifest)
+        return self._publish_segment(m, batch, "wal", ["ts", "type"],
+                                     list(m["segments"]))
+
+    def _publish_segment(self, m: dict, cells: "pa.Table", kind: str,
+                         stats: list[str], keep: list[str]) -> int:
+        """The driver-side segment publisher of ``mutate`` and the minor
+        merge: ``cells`` (already in the cell schema) become ONE pyarrow
+        parquet file plus a skip manifest of ``stats`` columns, written
+        into a hidden ``segments/.tmp-<seg>`` directory and renamed into
+        place — no reader, glob or replica ever sees a partial segment,
+        and vacuum reaps a crashed writer's temp directory — then the
+        manifest commits ``keep + [seg]`` at the next commit seq."""
+        from hbase_snapshot_spark.operators.layout import write_skipping_manifest
+
+        commit_seq = m["commit_seq"] + 1
+        seg = f"seg-{commit_seq:06d}-{kind}-{uuid.uuid4().hex[:8]}"
         segroot = os.path.join(self.dir, "segments")
         tmp = os.path.join(segroot, f".tmp-{seg}")
         os.makedirs(tmp)
         # the parquet schema alone round-trips the cell schema: skip the
         # redundant serialized Arrow schema (~600 B of footer per file)
-        pq.write_table(batch, os.path.join(
+        pq.write_table(cells, os.path.join(
             tmp, f"part-00000-{uuid.uuid4()}.snappy.parquet"), store_schema=False)
-        self._publish_ts_manifest(tmp)
+        write_skipping_manifest(tmp, stats)
         os.rename(tmp, os.path.join(segroot, seg))
         m2 = dict(m)
         m2["version"] = m["version"] + 1
-        m2["segments"] = list(m["segments"]) + [seg]
+        m2["segments"] = keep + [seg]
         m2["commit_seq"] = commit_seq
         return self._commit(m2)
 
@@ -1117,23 +1140,29 @@ class StoredTable:
     ) -> list[str]:
         """HBASE-745 incremental selection (Store.java:632-651): walk
         segments oldest→newest; skip the oldest while it is ≥ ratio × the
-        next one's size (large settled files stay put) or while more than
-        ``max_files`` would be selected; always consider compacting the
-        newest min(n, 4) regardless.  Returns the contiguous newest run
-        of segment names to merge ([] when below threshold or the run
-        degenerates to one file) — at scale this is what keeps minor
-        compaction cost proportional to NEW data, not table size."""
+        next one's size, while more than ``max_files`` would be
+        selected, or while the run's on-disk bytes exceed
+        ``_MINOR_MERGE_BYTES`` (the later ``compaction.max.size`` rule):
+        large settled files stay put.  Unlike the reference, no newest
+        tail is forced in (it pulled the bulk segment into every merge of
+        a 3-4-segment table), so a strictly >ratio-shrinking run
+        compacts nothing; the segment count stays logarithmic in the
+        ratio.  Returns the contiguous newest run to merge ([] when below
+        threshold or the run degenerates to one segment) — minor
+        compaction cost stays proportional to NEW data, not table size."""
         segs = list(self.manifest()["segments"])
         n = len(segs)
         if n < threshold:
             return []
         sizes = [self._segment_size(s) for s in segs]
-        tail = min(n, 4)
+        run = sum(sizes)
         point = 0
-        while point < n - tail:
+        while point < n - 1:
             if (sizes[point] < sizes[point + 1] * ratio
-                    and (n - point) <= max_files):
+                    and (n - point) <= max_files
+                    and run <= _MINOR_MERGE_BYTES):
                 break
+            run -= sizes[point]
             point += 1
         chosen = segs[point:]
         return chosen if len(chosen) > 1 else []
@@ -1142,34 +1171,28 @@ class StoredTable:
     def compact(self, major: bool = False, now: int | None = None,
                 segments: list[str] | None = None) -> int:
         """Store.compact:581.  Minor = pure k-way merge, NO masking —
-        every cell including tombstones and masked puts is retained
-        (MinorCompactingStoreScanner.java is just a KeyValueHeap drain).
-        Major = resolve with family maxVersions + TTL, tombstones purged.
-        The stream is rewritten sorted by the KeyValue total order
-        (row, family, qualifier, ts DESC) so downstream scans get
-        clustered, skippable files.
+        every cell including tombstones, masked puts and ``seq`` is
+        retained (MinorCompactingStoreScanner.java is just a
+        KeyValueHeap drain).  Major = resolve with family maxVersions +
+        TTL, tombstones purged.  The stream is rewritten sorted by the
+        KeyValue total order (row, family, qualifier, ts DESC, seq DESC)
+        so downstream scans get clustered, skippable files.
 
-        ``segments`` (minor only) restricts the merge to that subset —
-        the HBASE-745 incremental path (select_minor_compaction): the
-        untouched older segments stay in the manifest as-is."""
-        desc = self.descriptor
+        ``segments`` (minor only) merges that subset ON THE DRIVER — the
+        HBASE-745 incremental path (select_minor_compaction): each data
+        file is read with pyarrow in the cell schema, the merge is
+        written as ONE parquet file with a row/ts/type skip manifest
+        (:meth:`_publish_segment`, no Spark job), and the untouched
+        older segments stay in the manifest as-is.  A subset over
+        ``_MINOR_MERGE_BYTES`` raises ValueError: rewrite the table
+        through Spark with ``compact()`` / ``compact(major=True)``."""
         m = self.manifest()
-        keep: list[str] = []
+        if segments is not None and not major:
+            return self._merge_segments(m, segments)
         if major:
             cells, spec = self._source(m, compose(
-                desc, now=now if now is not None else self._now_ms()))
+                self.descriptor, now=now if now is not None else self._now_ms()))
             compacted = resolve(cells, spec=spec)
-        elif segments is not None:
-            merge = [s for s in m["segments"] if s in set(segments)]
-            keep = [s for s in m["segments"] if s not in set(segments)]
-            if len(merge) <= 1:
-                return self._head_version()
-            paths = [os.path.join(self.dir, "segments", s) for s in merge]
-            # explicit cell schema, as in _files: no schema-inference
-            # job, and an adopted directory's extra columns never carry
-            # into the compacted segment
-            compacted = self.spark.read.schema(
-                cell_schema(binary=m["binary"])).parquet(*paths)
         else:
             compacted = self.cells()
         # partition count from cluster parallelism, not from the input
@@ -1193,9 +1216,40 @@ class StoredTable:
         write_skipping_manifest(seg_dir, ["row", "ts", "type"])
         m2 = dict(m)
         m2["version"] = m["version"] + 1
-        m2["segments"] = keep + [seg]
+        m2["segments"] = [seg]
         m2["commit_seq"] = commit_seq
         return self._commit(m2)
+
+    def _merge_segments(self, m: dict, segments: list[str]) -> int:
+        """the driver-side raw merge behind ``compact(segments=)``"""
+        from hbase_snapshot_spark.operators.layout import _data_files
+
+        segments = set(segments)
+        merge = [s for s in m["segments"] if s in segments]
+        if len(merge) <= 1:
+            return m["version"]
+        size = sum(self._segment_size(s) for s in merge)
+        if size > _MINOR_MERGE_BYTES:
+            # like mutate's batch-size guard: the driver merges small runs
+            raise ValueError(
+                f"minor merge of {size} bytes exceeds {_MINOR_MERGE_BYTES}; "
+                "use compact() or compact(major=True) to rewrite through Spark")
+        schema = to_arrow_schema(cell_schema(binary=m["binary"]))
+        # per file: only the cell columns (an adopted directory's extra
+        # columns never carry over), cast to the cell schema (a widened
+        # integer column narrows back; an overflow raises)
+        parts = [pq.ParquetFile(f).read(columns=schema.names)
+                 .select(schema.names).cast(schema)
+                 for s in merge
+                 for f in sorted(_data_files(os.path.join(self.dir, "segments", s)))]
+        cells = pa.concat_tables(parts) if parts else schema.empty_table()
+        cells = cells.sort_by(
+            [(c, "ascending") for c in ("row", "family", "qualifier")]
+            + [("ts", "descending"), ("seq", "descending")],
+            null_placement="at_start")
+        keep = [s for s in m["segments"] if s not in segments]
+        return self._publish_segment(m, cells, "compact",
+                                     ["row", "ts", "type"], keep)
 
     @_locked
     def alter(self, descriptor: TableDescriptor) -> int:
@@ -1213,7 +1267,9 @@ class StoredTable:
         """Store.java:169 compactionThreshold — compact when the live
         segment count reaches the threshold (the reference's minor-
         compaction trigger; call after batch appends), merging only the
-        newest size-similar run (HBASE-745 incremental selection)."""
+        newest size-similar run under the byte cap (HBASE-745
+        incremental selection) on the driver — no Spark job; the
+        settled bulk segment is never rewritten here."""
         if len(self.manifest()["segments"]) < threshold:
             return None
         chosen = self.select_minor_compaction(threshold=threshold)

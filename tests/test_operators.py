@@ -588,7 +588,10 @@ def test_pack_sequences_default_is_grouped(spark):
     with warnings.catch_warnings():
         warnings.simplefilter("error")  # any warning -> failure
         out = pack_sequences(df, "n_tokens", cap=512, auto_groups=8)
-        rows = out.collect()
+    # collected outside the error filter: PySpark's collect leaves its
+    # result socket to the garbage collector, and the filter would turn
+    # that finalizer's ResourceWarning into an unraisable exception
+    rows = out.collect()
     assert "pack_group" in out.columns
     assert {r.pack_group for r in rows} <= set(range(8))
     # per-group invariants: offsets are the exclusive running sum in

@@ -1,10 +1,12 @@
 """Write-path tests: a mutate batch is one driver-written parquet file
 in exactly the cell schema with no Spark job, segments publish by
-rename, minor compaction reads with the explicit cell schema, the
-writer lock survives a dead holder, a writer killed at any commit point
-leaves a table the next writer commits to, a writer killed mid-snapshot
-leaves no listed snapshot, a snapshot name is never a path, and vacuum
-tolerates crashed writers' temp files."""
+rename, a minor compaction is a driver-side raw merge of the newest
+small run into one file in the cell schema (never the settled bulk
+segment, never past the byte cap), the writer lock survives a dead
+holder, a writer or merge killed at any commit point leaves a table the
+next writer commits to, a writer killed mid-snapshot leaves no listed
+snapshot, a snapshot name is never a path, and vacuum tolerates crashed
+writers' temp files."""
 
 import os
 import shutil
@@ -12,6 +14,7 @@ import signal
 import subprocess
 import sys
 import textwrap
+from collections import Counter
 
 import pyarrow.parquet as pq
 import pytest
@@ -20,6 +23,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from hbase_snapshot_spark.model import FamilyDescriptor, TableDescriptor, cell_schema
 from hbase_snapshot_spark.operators.layout import SKIP_MANIFEST_NAME, _data_files
+from hbase_snapshot_spark import table as table_mod
 from hbase_snapshot_spark.streaming import replicate
 from hbase_snapshot_spark.table import Delete, Put, TableNotFoundError, TableStore
 
@@ -41,6 +45,12 @@ def _mk(store, name="t", binary=False, scope=0):
 def _cellset(df):
     return {(bytes(r.row) if isinstance(r.row, bytearray) else r.row,
              r.family, r.qualifier, r.ts, r.value) for r in df.collect()}
+
+
+def _raw(t):
+    """the raw cell multiset: tombstones, masked puts and seq included"""
+    return Counter(tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
+                   for r in t.cells().collect())
 
 
 def _seg_dir(t, seg):
@@ -149,6 +159,103 @@ def test_minor_compaction_reads_the_cell_schema(spark, store, tmp_path):
     assert _cellset(t.read()) == want
 
 
+def _small_run(t, k=lambda s: s, n=3):
+    """``n`` small mutate segments holding a family tombstone, a
+    version tombstone and a masked put"""
+    t.mutate([Put(k(f"r{i}")).add("f", k("q"), k(f"a{i}"), ts=1)
+              for i in range(3)])
+    t.mutate([Put(k("r0")).add("f", k("q"), k("b0"), ts=2),
+              Delete(k("r1")),
+              Delete(k("r2")).delete_column("f", k("q"), ts=1)], now=3)
+    for j in range(n - 2):
+        t.mutate([Put(k(f"s{j}")).add("f", k("q"), k(f"c{j}"), ts=4 + j)])
+
+
+def test_minor_selection_leaves_the_settled_segment(spark, store):
+    """[big, small, small]: the big segment is >= 2x the next, so only
+    the newest small run merges and big stays the first entry"""
+    t = _mk(store)
+    t.mutate([Put(f"r{i:04d}").add("f", "q", "base", ts=1) for i in range(300)])
+    big = t.manifest()["segments"][0]
+    t.mutate([Put("s0").add("f", "q", "v0", ts=10)])
+    t.mutate([Put("s1").add("f", "q", "v1", ts=11)])
+    small = t.manifest()["segments"][1:]
+    want = _cellset(t.read())
+    assert t.select_minor_compaction() == small
+    t.maybe_compact()
+    segs = t.manifest()["segments"]
+    assert segs[0] == big and len(segs) == 2 and "-compact-" in segs[1]
+    assert _cellset(t.read()) == want
+
+
+def test_minor_merge_respects_the_byte_cap(store, monkeypatch):
+    t = _mk(store)
+    _small_run(t, n=4)
+    segs = t.manifest()["segments"]
+    sizes = [t._segment_size(s) for s in segs]
+    # a cap that fits only the newest two segments: the oldest are
+    # skipped even though their sizes are similar
+    monkeypatch.setattr(table_mod, "_MINOR_MERGE_BYTES", sum(sizes[2:]))
+    assert t.select_minor_compaction() == segs[2:]
+    # a cap below any two-segment run: nothing is selected, and an
+    # explicit merge over it raises and commits nothing
+    monkeypatch.setattr(table_mod, "_MINOR_MERGE_BYTES", sum(sizes[2:]) - 1)
+    assert t.select_minor_compaction() == []
+    assert t.maybe_compact() is None
+    v = t.manifest()["version"]
+    with pytest.raises(ValueError, match="compact"):
+        t.compact(segments=segs[2:])
+    assert t.manifest()["version"] == v and t.manifest()["segments"] == segs
+    assert sorted(os.listdir(os.path.join(t.dir, "segments"))) == sorted(segs)
+
+
+def test_small_maybe_compact_launches_no_spark_job(spark, store):
+    t = _mk(store)
+    _small_run(t)
+    v, n = _jobs(spark, "minor-merge", t.maybe_compact)
+    assert v is not None and n == 0
+    assert len(t.manifest()["segments"]) == 1
+
+
+@pytest.mark.parametrize("binary", [False, True])
+def test_minor_merge_is_one_sorted_file_with_a_row_manifest(store, binary):
+    t = _mk(store, binary=binary)
+    k = (lambda s: s.encode()) if binary else (lambda s: s)
+    _small_run(t, k)
+    t.maybe_compact()
+    (seg,) = t.manifest()["segments"]
+    assert "-compact-" in seg
+    (f,) = _data_files(_seg_dir(t, seg))
+    assert sorted(os.listdir(_seg_dir(t, seg))) == sorted(
+        [SKIP_MANIFEST_NAME, os.path.basename(f)])
+    expect = to_arrow_schema(cell_schema(binary=binary))
+    got = pq.read_schema(f)
+    assert got == expect
+    assert [x.nullable for x in got] == [x.nullable for x in expect]
+    skip = table_mod._read_json(os.path.join(_seg_dir(t, seg), SKIP_MANIFEST_NAME))
+    assert skip["columns"] == ["row", "ts", "type"]
+    stats = skip["files"][os.path.basename(f)]
+    assert all(None not in stats[c] for c in ("row", "ts", "type"))
+    assert stats["ts"] == [1, 4] and stats["type"][0] < stats["type"][1]
+    # KeyValue order: row, family, qualifier (null first), ts/seq desc
+    rows = pq.read_table(f).to_pylist()
+    keys = [(r["row"], r["family"], r["qualifier"] is not None,
+             r["qualifier"] or k(""), -r["ts"], -r["seq"]) for r in rows]
+    assert keys == sorted(keys)
+
+
+def test_minor_merge_keeps_the_raw_cell_multiset(store):
+    """a raw merge: tombstones, masked puts and seq all survive"""
+    t = _mk(store)
+    _small_run(t)
+    before, want = _raw(t), _cellset(t.read())
+    assert sum(before.values()) == 7
+    t.maybe_compact()
+    assert len(t.manifest()["segments"]) == 1
+    assert _raw(t) == before
+    assert _cellset(t.read()) == want
+
+
 def _hold_lock_child(table_dir):
     """a plain Python child (no JVM) that takes the table's writer lock
     and holds it until killed"""
@@ -211,9 +318,9 @@ def test_vacuum_removes_stray_temp_manifests(store):
                                   ("r1", "f", "q", 10, "v1")}
 
 
-# a plain Python child (no JVM) that runs one blind-put mutate and dies
-# with os._exit(9) right after the named commit point: the segment
-# rename, the vN.json write, or the HEAD swap
+# a plain Python child (no JVM) that runs one write (a blind-put mutate
+# or a minor merge) and dies with os._exit(9) right after the named
+# commit point: the segment rename, the vN.json write, or the HEAD swap
 _CRASH_CHILD = """
 import os, sys
 sys.path.insert(0, {repo!r})
@@ -235,9 +342,20 @@ def crash_write_json(path, obj):
         os._exit(9)
 
 os.rename, T.write_json_atomic = crash_rename, crash_write_json
-T.TableStore(None, {base!r}).table({name!r}).mutate(
-    [T.Put(r).add("f", "q", "c-" + r, ts=5) for r in {rows!r}])
+t = T.TableStore(None, {base!r}).table({name!r})
+{call}
 """
+
+
+def _crash_child(t, point, call):
+    """run ``call`` (Python source over the handle ``t``) in the child;
+    assert it died at ``point``"""
+    child = subprocess.run(
+        [sys.executable, "-c", _CRASH_CHILD.format(
+            repo=REPO, point=point, base=t.store.base_path, name=t.name,
+            call=call)],
+        timeout=120)
+    assert child.returncode == 9
 
 
 @pytest.fixture(scope="module")
@@ -256,12 +374,8 @@ def test_writer_killed_at_commit_point(crash_table, point):
     t = crash_table
     pre = _cellset(t.read())
     crash_rows = [f"{point}-crash{i}" for i in range(2)]
-    child = subprocess.run(
-        [sys.executable, "-c", _CRASH_CHILD.format(
-            repo=REPO, point=point, base=t.store.base_path, name=t.name,
-            rows=crash_rows)],
-        timeout=120)
-    assert child.returncode == 9
+    _crash_child(t, point, "t.mutate([T.Put(r).add('f', 'q', 'c-' + r, ts=5) "
+                           f"for r in {crash_rows!r}])")
 
     segdir = os.path.join(t.dir, "segments")
     orphans = sorted(set(os.listdir(segdir)) - set(t.manifest()["segments"]))
@@ -280,6 +394,55 @@ def test_writer_killed_at_commit_point(crash_table, point):
 
     assert t.vacuum() == orphans
     assert _cellset(t.read()) == want
+
+
+@pytest.mark.parametrize("point", ["segment", "manifest", "head"])
+def test_minor_merge_killed_at_commit_point(store, point):
+    """A minor merge killed at a commit point (it runs in a plain
+    Python child: the merge needs no JVM) leaves the table readable
+    as before, the next writer commits, and vacuum removes exactly the
+    orphan merged segment — or, once HEAD has swapped, the merged-away
+    inputs."""
+    t = _mk(store, f"merge-{point}")
+    _small_run(t)
+    inputs = t.manifest()["segments"]
+    pre, raw = _cellset(t.read()), _raw(t)
+    _crash_child(t, point, "t.maybe_compact()")
+
+    segdir = os.path.join(t.dir, "segments")
+    segs = t.manifest()["segments"]
+    orphans = sorted(set(os.listdir(segdir)) - set(segs))
+    if point == "head":
+        assert len(segs) == 1 and "-compact-" in segs[0]
+        assert orphans == sorted(inputs)
+    else:
+        assert segs == inputs
+        assert len(orphans) == 1 and "-compact-" in orphans[0], orphans
+    assert _cellset(t.read()) == pre and _raw(t) == raw
+
+    v = t.mutate([Put("next").add("f", "q", "n", ts=7)])
+    assert t.manifest()["version"] == v
+    want = pre | {("next", "f", "q", 7, "n")}
+    assert _cellset(t.read()) == want
+    assert t.vacuum() == orphans
+    assert _cellset(t.read()) == want
+
+
+def test_replicate_never_ships_compacted_or_temp_segments(spark, tmp_path):
+    """the peer receives each WAL edit once: neither the merged
+    ``-compact-`` segment nor a crashed merge's ``.tmp-`` dir ships"""
+    src = _mk(TableStore(spark, str(tmp_path / "src")), scope=1)
+    dst = _mk(TableStore(spark, str(tmp_path / "dst")), scope=1)
+    _small_run(src)
+    wal = _raw(src)
+    src.maybe_compact()
+    (seg,) = src.manifest()["segments"]
+    assert "-compact-" in seg
+    shutil.copytree(_seg_dir(src, seg),
+                    _seg_dir(src, ".tmp-seg-000099-compact-00000000"))
+    replicate(spark, src, dst, str(tmp_path / "ckpt"), once=True)
+    assert _raw(dst) == wal
+    assert _cellset(dst.read()) == _cellset(src.read())
 
 
 # a plain Python child (no JVM) that snapshots the table and dies with
