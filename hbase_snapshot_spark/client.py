@@ -257,12 +257,12 @@ class Table:
         )
         return resolved.join(F.broadcast(target), on="row", how="inner")
 
-    def scanner(self, scan: Scan | None = None, caching: int = 1000):
-        """ClientScanner analogue (HTable.java:786; Scan.setCaching:298).
-        Spark partitions replace region-by-region paging; this yields
-        result rows to the driver incrementally (one partition in flight)
-        instead of a collect() — the ``caching`` knob shapes nothing but
-        is kept for API parity (documented divergence, SURVEY §3.2)."""
+    def scanner(self, scan: Scan | None = None):
+        """ClientScanner analogue (HTable.java:786).  Spark partitions
+        replace region-by-region paging; this yields result rows to the
+        driver incrementally (one partition in flight) instead of a
+        collect(), so there is no ``caching`` rows-per-RPC knob
+        (Scan.setCaching:298; documented divergence, SURVEY §3.2)."""
         df = self.scan(scan).orderBy(
             "row", "family", "qualifier", F.desc("ts"), F.desc("seq")
         )
@@ -270,13 +270,7 @@ class Table:
 
     def row_count(self, scan: Scan | None = None) -> int:
         """mapreduce/RowCounter.java:40-117 — rows with ≥1 visible cell
-        (FirstKeyOnlyFilter pushdown ≡ distinct row keys).  The counted
-        DataFrame is built by :meth:`_row_count_df` (separated so plan
-        tooling can ``explain`` exactly what this counts)."""
-        return self._row_count_df(scan).count()
-
-    def _row_count_df(self, scan: Scan | None = None) -> DataFrame:
-        """The single-column DataFrame whose count row_count returns —
+        (FirstKeyOnlyFilter pushdown ≡ distinct row keys): the count of
         one distinct ``row`` per visible row.
 
         Fast paths (r15 — VERDICT r14 Next #4, guide §2.3 "aggregate
@@ -326,7 +320,7 @@ class Table:
         spec = self._spec(scan)
         if scan.filter is not None or spec.time_range is not None \
                 or spec.columns is not None:
-            return self.scan(scan).select("row").distinct()
+            return self.scan(scan).select("row").distinct().count()
         cells, spec = self._select(spec, [(scan.start_row, scan.stop_row)])
         if scan.start_row is not None:
             cells = cells.filter(F.col("row") >= F.lit(scan.start_row))
@@ -338,7 +332,7 @@ class Table:
         if ttl_pred is not None:
             cells = cells.filter(ttl_pred)
         if spec.no_tombstones:
-            return cells.select("row").distinct()
+            return cells.select("row").distinct().count()
         t, ts = F.col("type"), F.col("ts")
         g1 = cells.repartition("row").groupBy(
             "row", "family", "qualifier", "ts").agg(
@@ -362,7 +356,7 @@ class Table:
         vis = g3.filter(
             F.col("_bestf").isNotNull()
             & (F.col("_famdel").isNull() | (F.col("_bestf") > F.col("_famdel"))))
-        return vis.select("row").distinct()
+        return vis.select("row").distinct().count()
 
 
 class ScannerLeases:

@@ -9,30 +9,22 @@ as the join residual) is O(1) per cell and measured 8x faster at sf0.1.
 
 This module is that plan as a first-class engine operator, safe for
 ARBITRARY row keys (the bench-private r14 helper bucketed via
-``cast(row AS long)``, correct only for zero-padded numeric keys):
+``cast(row AS long)``, correct only for zero-padded numeric keys) by
+order-preserving 56-bit prefix bucketing of str/bytes keys: strip the
+common prefix of all band bounds (any row inside any band must share
+it — a row differing from the common prefix at byte i sorts outside
+[lo, hi) at byte i), take the next 7 bytes zero-padded as a big-endian
+integer ``u`` (non-strictly monotone in key order), block = ``u div
+block_size`` with block_size = the widest band's u-width, so every band
+spans at most 2 blocks.  Monotonicity makes the enumerated blocks a
+superset of any in-band row's block; the residual bounds keep the
+result exact.  Zero-padded digit keys take the same path: a numeric
+cast would bucket them no finer (each band spans at most 2 blocks
+either way).
 
-* **numeric path** — when every band bound is a same-width all-digit
-  string, the block id is the exact ``floor(int(row) / block)`` the
-  bench used, GUARDED by a width check: any row the guard or the cast
-  rejects (wrong length, non-digit, negative) falls into a sentinel
-  block that carries every band as residual, so odd keys in a
-  well-formed band are never dropped (for fixed-width digit strings,
-  lexicographic order == numeric order, hence a row inside a band is
-  inside the band's block range; every other row reaches the sentinel).
-
-* **general path** — order-preserving 56-bit prefix bucketing for any
-  str/bytes keys: strip the common prefix of all band bounds (any row
-  inside any band must share it — a row differing from the common
-  prefix at byte i sorts outside [lo, hi) at byte i), take the next 7
-  bytes zero-padded as a big-endian integer ``u`` (non-strictly
-  monotone in key order), block = ``u div block_size`` with block_size
-  = the widest band's u-width, so every band spans at most 2 blocks.
-  Monotonicity makes the enumerated blocks a superset of any in-band
-  row's block; the residual bounds keep the result exact.
-
-Both paths produce the SAME physical shape — ``BroadcastHashJoin
-LeftSemi BuildRight`` on the block id — never a nested loop, never a
-cartesian product (pinned in tests/test_multirange.py).  A whole-row
+The physical shape is ``BroadcastHashJoin LeftSemi BuildRight`` on the
+block id — never a nested loop, never a cartesian product (pinned in
+tests/test_multirange.py).  A whole-row
 restriction commutes with resolve (masking and version counting are
 per-(row, family, qualifier)), so callers apply it BEFORE the resolve
 exchange: the shuffle then carries only the touched bands — the plan
@@ -44,31 +36,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: sentinel block for rows the numeric fast-path guard rejects — the
-#: bands side carries one sentinel row per band, so such rows are
-#: residual-checked against every band (correct; rare by construction:
-#: a well-formed fixed-width numeric table has none)
-_SENTINEL_BLK = -1
-
-#: prefix bytes the general path buckets on: 7 bytes = 56 bits fits a
+#: prefix bytes the bucketing reads: 7 bytes = 56 bits fits a
 #: signed BIGINT through hex/conv with headroom
 _PREFIX_BYTES = 7
-
-
-def _is_fixed_width_digits(ranges: list) -> "int | None":
-    """The numeric fast path's precondition: every bound is a str of
-    one shared width consisting only of ASCII digits.  Returns the
-    width, or None when the general path must be used."""
-    width = None
-    for lo, hi in ranges:
-        for b in (lo, hi):
-            if not isinstance(b, str) or not b.isascii() or not b.isdigit():
-                return None
-            if width is None:
-                width = len(b)
-            elif len(b) != width:
-                return None
-    return width
 
 
 def _common_prefix(bounds: list[bytes]) -> bytes:
@@ -95,7 +65,6 @@ def _u_prefix(key: bytes, cp_len: int) -> int:
 def restrict_row_ranges(
     cells: DataFrame,
     ranges: list,
-    block: int | None = None,
     row_col: str = "row",
 ) -> DataFrame:
     """Restrict ``cells`` to the union of half-open row-key bands
@@ -104,8 +73,6 @@ def restrict_row_ranges(
     block enumeration; a SINGLE unbounded range needs no band machinery
     — a plain range filter pushes down to the scan).
 
-    ``block`` overrides the numeric path's block size (key units);
-    default = the widest band, so each band spans at most 2 blocks.
     Result is schema-identical to ``cells`` and row-for-row equal to
     ``cells.filter(OR of (row >= lo) & (row < hi))`` — pinned by
     tests/test_multirange.py including overlap (left-semi: no
@@ -121,56 +88,33 @@ def restrict_row_ranges(
     spark = cells.sparkSession
     row = F.col(row_col)
 
-    row_is_string = dict(cells.dtypes)[row_col] == "string"
-    width = _is_fixed_width_digits(ranges) if row_is_string else None
-    if width is not None:
-        bs = block if block is not None else max(
-            1, max(int(hi) - int(lo) for lo, hi in ranges))
-        rows = []
-        for lo, hi in ranges:
-            for blk in range(int(lo) // bs, int(hi) // bs + 1):
-                rows.append((lo, hi, blk))
-            rows.append((lo, hi, _SENTINEL_BLK))
-        bands_df = spark.createDataFrame(
-            rows, "lo STRING, hi STRING, blk LONG")
-        # try_cast: a non-numeric W-width key must reach the sentinel,
-        # not throw under ANSI mode (Spark 4 default)
-        num = F.floor(row.try_cast("long") / bs)
-        blk_expr = (
-            F.when(
-                (F.length(row) == width) & num.isNotNull() & (num >= 0), num)
-            .otherwise(F.lit(_SENTINEL_BLK))
-        )
-    else:
-        is_binary = not row_is_string
+    is_binary = dict(cells.dtypes)[row_col] != "string"
 
-        def as_bytes(b):
-            return b if isinstance(b, (bytes, bytearray)) else str(b).encode()
+    def as_bytes(b):
+        return b if isinstance(b, (bytes, bytearray)) else str(b).encode()
 
-        cp = _common_prefix(
-            [as_bytes(b) for lo, hi in ranges for b in (lo, hi)])
-        u_bounds = [
-            (_u_prefix(as_bytes(lo), len(cp)), _u_prefix(as_bytes(hi), len(cp)))
-            for lo, hi in ranges
-        ]
-        bs = max(1, max(uh - ul for ul, uh in u_bounds))
-        rows = []
-        for (lo, hi), (ul, uh) in zip(ranges, u_bounds):
-            for blk in range(ul // bs, uh // bs + 1):
-                rows.append((lo, hi, blk))
-        schema = ("lo BINARY, hi BINARY, blk LONG" if is_binary
-                  else "lo STRING, hi STRING, blk LONG")
-        bands_df = spark.createDataFrame(
-            [(bytes(as_bytes(lo)), bytes(as_bytes(hi)), blk) if is_binary
-             else (lo, hi, blk) for lo, hi, blk in rows], schema)
-        src = (f"`{row_col}`" if is_binary
-               else f"CAST(`{row_col}` AS BINARY)")
-        # Catalyst twin of _u_prefix: substring → rpad(0x00) → hex →
-        # conv(16, 10); 7 bytes = 14 hex digits < 2^56, fits BIGINT
-        blk_expr = F.expr(
-            f"CAST(conv(hex(rpad(substring({src}, {len(cp) + 1}, "
-            f"{_PREFIX_BYTES}), {_PREFIX_BYTES}, x'00')), 16, 10) AS BIGINT) "
-            f"div {bs}L")
+    cp = _common_prefix([as_bytes(b) for lo, hi in ranges for b in (lo, hi)])
+    u_bounds = [
+        (_u_prefix(as_bytes(lo), len(cp)), _u_prefix(as_bytes(hi), len(cp)))
+        for lo, hi in ranges
+    ]
+    bs = max(1, max(uh - ul for ul, uh in u_bounds))
+    rows = []
+    for (lo, hi), (ul, uh) in zip(ranges, u_bounds):
+        for blk in range(ul // bs, uh // bs + 1):
+            rows.append((lo, hi, blk))
+    schema = ("lo BINARY, hi BINARY, blk LONG" if is_binary
+              else "lo STRING, hi STRING, blk LONG")
+    bands_df = spark.createDataFrame(
+        [(bytes(as_bytes(lo)), bytes(as_bytes(hi)), blk) if is_binary
+         else (lo, hi, blk) for lo, hi, blk in rows], schema)
+    src = f"`{row_col}`" if is_binary else f"CAST(`{row_col}` AS BINARY)"
+    # Catalyst twin of _u_prefix: substring → rpad(0x00) → hex →
+    # conv(16, 10); 7 bytes = 14 hex digits < 2^56, fits BIGINT
+    blk_expr = F.expr(
+        f"CAST(conv(hex(rpad(substring({src}, {len(cp) + 1}, "
+        f"{_PREFIX_BYTES}), {_PREFIX_BYTES}, x'00')), 16, 10) AS BIGINT) "
+        f"div {bs}L")
 
     cb = cells.withColumn("__blk", blk_expr)
     return cb.join(

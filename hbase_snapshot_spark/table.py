@@ -37,6 +37,10 @@ does a minor merge, whose input is capped at ``_MINOR_MERGE_BYTES``.
 The distributed paths (append_cells, bulk_load, the whole-table
 ``compact()`` and ``compact(major=True)``) write through Spark: a
 1000-executor bulk load writes one segment with thousands of files.
+Every writer — these, and adopt_segment's copy or move — publishes
+through ``StoredTable._publish_segment``: the segment is built in a
+hidden ``segments/.tmp-`` directory and renamed into place before the
+manifest commit, so no reader, glob or replica sees a partial one.
 Reads are ``spark.read.parquet(seg1, seg2, ...)`` so partition pruning,
 predicate pushdown, and row-group skipping all apply.
 """
@@ -364,7 +368,7 @@ def _segment_skip_manifest(seg_dir: str) -> "dict | None":
     (the wire front-ends scan from server threads): segments are
     IMMUTABLE once committed, so both the manifest and the
     completeness verdict never go stale; an ABSENT manifest is not
-    cached — adopt_segment may publish one an instant after the copy."""
+    cached."""
     from hbase_snapshot_spark.operators.layout import (
         SKIP_MANIFEST_NAME,
         _data_files,
@@ -395,6 +399,17 @@ def _segment_skip_manifest(seg_dir: str) -> "dict | None":
 #: partial — permanently unprunable" (dir + manifest are immutable).
 _SKIP_MANIFEST_CACHE: dict[str, "dict | None"] = {}
 _SKIP_MANIFEST_CACHE_CAP = 256
+
+
+def _write_arrow(cells: "pa.Table", seg_dir: str) -> None:
+    """a new segment directory holding ``cells`` (already in the cell
+    schema) as ONE pyarrow parquet file — the driver-side writer of
+    ``mutate`` and the minor merge"""
+    os.makedirs(seg_dir)
+    # the parquet schema alone round-trips the cell schema: skip the
+    # redundant serialized Arrow schema (~600 B of footer per file)
+    pq.write_table(cells, os.path.join(
+        seg_dir, f"part-00000-{uuid.uuid4()}.snappy.parquet"), store_schema=False)
 
 
 def _read_json(path: str):
@@ -538,17 +553,19 @@ class StoredTable:
         finally:
             lk.release()
 
-    def _commit(self, manifest: dict) -> int:
-        """write manifest version N+1 and atomically repoint HEAD.
-        Guards against lost updates: HEAD must still be at the version
-        the manifest was derived from (optimistic check under the lock)."""
-        v = manifest["version"]
+    def _commit(self, m: dict, **changes) -> int:
+        """write manifest version N+1 — ``m`` (version N) with
+        ``changes`` applied — and atomically repoint HEAD.  Guards
+        against lost updates: HEAD must still be at version N
+        (optimistic check under the lock)."""
+        v = m["version"] + 1
         head = self._head_version()
-        if head != v - 1:
+        if head != m["version"]:
             raise RuntimeError(
                 f"concurrent commit detected on {self.name}: "
                 f"HEAD=v{head}, committing v{v}"
             )
+        manifest = {**m, **changes, "version": v}
         write_json_atomic(os.path.join(self.dir, "manifests", f"v{v}.json"), manifest)
         write_json_atomic(os.path.join(self.dir, "HEAD.json"), {"version": v})
         # the swap supersedes any filter-stream caches taken out against
@@ -765,34 +782,8 @@ class StoredTable:
         # explicitly instead of inferring it from the files (_files)
         df = df.select(*[F.col(f.name).cast(f.dataType)
                          for f in cell_schema(binary=m["binary"]).fields])
-        seg = f"seg-{commit_seq:06d}-wal-{uuid.uuid4().hex[:8]}"
-        seg_dir = os.path.join(self.dir, "segments", seg)
-        df.write.parquet(seg_dir)
-        self._publish_ts_manifest(seg_dir)
-        m2 = dict(m)
-        m2["version"] = m["version"] + 1
-        m2["segments"] = list(m["segments"]) + [seg]
-        m2["commit_seq"] = commit_seq
-        return self._commit(m2)
-
-    @staticmethod
-    def _publish_ts_manifest(seg_dir: str) -> None:
-        """WAL-append segments arrive in commit order, not row order —
-        per-file ROW stats would be near-useless — but they are
-        naturally TIME-clustered (each commit's cells share a recent ts
-        window), so a TS-ONLY manifest lets time-range / TTL scans skip
-        whole append segments at the file level.  TimeRangeTracker
-        parity: the reference tracks per-HFile ts bounds for exactly
-        this (regionserver/TimeRangeTracker.java:147, consumed by
-        StoreFile.Reader.shouldSeek:991 / MemStore.shouldSeek:509).
-        One footer pass over the just-written files; no data pages.
-        ``type`` min/max ride along (r15): a segment whose every file
-        reads type min == max == PUT is proven delete-free — the
-        per-HFile "no deletes" metadata the reference keeps — which
-        lets reads skip mask()'s tombstone windows (_files)."""
-        from hbase_snapshot_spark.operators.layout import write_skipping_manifest
-
-        write_skipping_manifest(seg_dir, ["ts", "type"])
+        return self._publish_segment(m, "wal", df.write.parquet,
+                                     ["ts", "type"], list(m["segments"]))
 
     def _now_ms(self) -> int:
         return int(time.time() * 1000)
@@ -803,31 +794,20 @@ class StoredTable:
         (mapreduce/LoadIncrementalHFiles.java:80-87): atomically adopt a
         prepared parquet directory (e.g. bulk_load output) into the live
         table — metadata-only (copy/move + manifest commit; no
-        region-boundary re-splitting needed, there are no fixed regions)."""
+        region-boundary re-splitting needed, there are no fixed regions).
+        A bulk_load output's skip manifest travels with it; any other
+        directory gets a row/ts/type one before it goes live."""
         m = self.manifest()
         self._check_writable(m)
-        commit_seq = m["commit_seq"] + 1
-        seg = f"seg-{commit_seq:06d}-adopted-{uuid.uuid4().hex[:8]}"
-        dst = os.path.join(self.dir, "segments", seg)
-        if move:
-            shutil.move(src_path, dst)
-        else:
-            shutil.copytree(src_path, dst)
-        # bulk_load outputs already carry the file-skipping manifest
-        # (it travels with the copy); backfill for prepared directories
-        # from other writers so the scan planner can prune them too
-        from hbase_snapshot_spark.operators.layout import (
-            SKIP_MANIFEST_NAME,
-            write_skipping_manifest,
-        )
 
-        if not os.path.exists(os.path.join(dst, SKIP_MANIFEST_NAME)):
-            write_skipping_manifest(dst, ["row", "ts", "type"])
-        m2 = dict(m)
-        m2["version"] = m["version"] + 1
-        m2["segments"] = list(m["segments"]) + [seg]
-        m2["commit_seq"] = commit_seq
-        return self._commit(m2)
+        def write(tmp):
+            if move:
+                shutil.move(src_path, tmp)
+            else:
+                shutil.copytree(src_path, tmp)
+
+        return self._publish_segment(m, "adopted", write,
+                                     ["row", "ts", "type"], list(m["segments"]))
 
     @_locked
     def mutate(self, mutations: list[Mutation], now: int | None = None) -> int:
@@ -836,11 +816,7 @@ class StoredTable:
         parquet file in exactly the table's cell schema, written on the
         driver with pyarrow — the WAL append launches no Spark job (only
         a no-ts deleteColumn's latest-version lookup reads through
-        Spark).  The file and its ts/type skip manifest are written
-        into a hidden ``segments/.tmp-<seg>`` directory and renamed into
-        place before the manifest commit, so no reader, glob or replica
-        ever sees a partial segment; vacuum removes a crashed writer's
-        temp directory.
+        Spark) — and published by :meth:`_publish_segment`.
 
         Boundary: this is the INTERACTIVE write path — the mutation list
         is driver-resident, like the reference's client-side write
@@ -945,37 +921,46 @@ class StoredTable:
         schema = to_arrow_schema(cell_schema(binary=m["binary"]))
         batch = pa.Table.from_pydict(dict(zip(schema.names, zip(*rows))),
                                      schema=schema)
-        # WAL segments publish ts/type stats only (_publish_ts_manifest)
-        return self._publish_segment(m, batch, "wal", ["ts", "type"],
-                                     list(m["segments"]))
+        return self._publish_segment(
+            m, "wal", lambda tmp: _write_arrow(batch, tmp), ["ts", "type"],
+            list(m["segments"]))
 
-    def _publish_segment(self, m: dict, cells: "pa.Table", kind: str,
-                         stats: list[str], keep: list[str]) -> int:
-        """The driver-side segment publisher of ``mutate`` and the minor
-        merge: ``cells`` (already in the cell schema) become ONE pyarrow
-        parquet file plus a skip manifest of ``stats`` columns, written
-        into a hidden ``segments/.tmp-<seg>`` directory and renamed into
-        place — no reader, glob or replica ever sees a partial segment,
-        and vacuum reaps a crashed writer's temp directory — then the
-        manifest commits ``keep + [seg]`` at the next commit seq."""
-        from hbase_snapshot_spark.operators.layout import write_skipping_manifest
+    def _publish_segment(self, m: dict, kind: str, write, stats: list[str],
+                         keep: list[str]) -> int:
+        """The one way a segment enters ``segments/``: name it
+        ``seg-<seq>-<kind>-<uuid>`` at the next commit seq, let
+        ``write(tmp)`` create the hidden ``segments/.tmp-<seg>``
+        directory (a pyarrow file, a Spark write, a copy or a move),
+        add a skip manifest of the ``stats`` columns unless the
+        directory already carries one, rename it into place, and commit
+        ``keep + [seg]``.  No reader, glob or replica ever sees a
+        partial segment: a write that raises removes its temp dir, and
+        vacuum reaps a killed writer's.
+
+        Row-sorted segments (compactions, bulk_load outputs) publish
+        row/ts/type stats; WAL segments arrive in commit order, so they
+        publish ts/type only — time-clustered, their ts bounds still let
+        time-range / TTL scans skip them (TimeRangeTracker.java:147,
+        StoreFile.Reader.shouldSeek:991), and a type min == max == PUT
+        proves a file delete-free (_files)."""
+        from hbase_snapshot_spark.operators.layout import (
+            SKIP_MANIFEST_NAME,
+            write_skipping_manifest,
+        )
 
         commit_seq = m["commit_seq"] + 1
         seg = f"seg-{commit_seq:06d}-{kind}-{uuid.uuid4().hex[:8]}"
         segroot = os.path.join(self.dir, "segments")
         tmp = os.path.join(segroot, f".tmp-{seg}")
-        os.makedirs(tmp)
-        # the parquet schema alone round-trips the cell schema: skip the
-        # redundant serialized Arrow schema (~600 B of footer per file)
-        pq.write_table(cells, os.path.join(
-            tmp, f"part-00000-{uuid.uuid4()}.snappy.parquet"), store_schema=False)
-        write_skipping_manifest(tmp, stats)
-        os.rename(tmp, os.path.join(segroot, seg))
-        m2 = dict(m)
-        m2["version"] = m["version"] + 1
-        m2["segments"] = keep + [seg]
-        m2["commit_seq"] = commit_seq
-        return self._commit(m2)
+        try:
+            write(tmp)
+            if not os.path.exists(os.path.join(tmp, SKIP_MANIFEST_NAME)):
+                write_skipping_manifest(tmp, stats)
+            os.rename(tmp, os.path.join(segroot, seg))
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        return self._commit(m, segments=keep + [seg], commit_seq=commit_seq)
 
     def _check_family(self, family, families: set | None = None) -> None:
         """HRegion.checkFamily:2391 — reject families the descriptor
@@ -1203,22 +1188,10 @@ class StoredTable:
         ).sortWithinPartitions(
             "row", "family", "qualifier", F.col("ts").desc(), F.col("seq").desc()
         )
-        commit_seq = m["commit_seq"] + 1
-        seg = f"seg-{commit_seq:06d}-compact-{uuid.uuid4().hex[:8]}"
-        seg_dir = os.path.join(self.dir, "segments", seg)
-        compacted.write.parquet(seg_dir)
-        # the rewrite is row-sorted — publish the file-skipping manifest
-        # so cells_for_ranges can prune the compacted files driver-side;
-        # ts bounds ride along for time-range/TTL pruning
-        # (TimeRangeTracker parity — TimeRangeTracker.java:147)
-        from hbase_snapshot_spark.operators.layout import write_skipping_manifest
-
-        write_skipping_manifest(seg_dir, ["row", "ts", "type"])
-        m2 = dict(m)
-        m2["version"] = m["version"] + 1
-        m2["segments"] = [seg]
-        m2["commit_seq"] = commit_seq
-        return self._commit(m2)
+        # the rewrite is row-sorted: its row stats let reads prune the
+        # compacted files driver-side
+        return self._publish_segment(m, "compact", compacted.write.parquet,
+                                     ["row", "ts", "type"], [])
 
     def _merge_segments(self, m: dict, segments: list[str]) -> int:
         """the driver-side raw merge behind ``compact(segments=)``"""
@@ -1248,8 +1221,9 @@ class StoredTable:
             + [("ts", "descending"), ("seq", "descending")],
             null_placement="at_start")
         keep = [s for s in m["segments"] if s not in segments]
-        return self._publish_segment(m, cells, "compact",
-                                     ["row", "ts", "type"], keep)
+        return self._publish_segment(
+            m, "compact", lambda tmp: _write_arrow(cells, tmp),
+            ["row", "ts", "type"], keep)
 
     @_locked
     def alter(self, descriptor: TableDescriptor) -> int:
@@ -1257,11 +1231,7 @@ class StoredTable:
         descriptor (family knobs like maxVersions/TTL take effect on the
         next read; data is untouched, exactly the reference's behavior
         where schema lives in .tableinfo, not in HFiles)."""
-        m = self.manifest()
-        m2 = dict(m)
-        m2["version"] = m["version"] + 1
-        m2["descriptor"] = descriptor.to_dict()
-        return self._commit(m2)
+        return self._commit(self.manifest(), descriptor=descriptor.to_dict())
 
     def maybe_compact(self, threshold: int = 3) -> int | None:
         """Store.java:169 compactionThreshold — compact when the live
@@ -1393,12 +1363,8 @@ class StoredTable:
         snapshot's.  (The reference must split & replay WALs; our
         snapshots capture the full edit log, so restore is exact.)"""
         info = self.snapshot_manifest(name)
-        m = self.manifest()
-        m2 = dict(m)
-        m2["version"] = m["version"] + 1
-        m2["segments"] = list(info["segments"])
-        m2["descriptor"] = info["descriptor"]
-        return self._commit(m2)
+        return self._commit(self.manifest(), segments=list(info["segments"]),
+                            descriptor=info["descriptor"])
 
     @_locked
     def delete_snapshot(self, name: str) -> None:
@@ -1435,36 +1401,34 @@ class StoredTable:
         # presence alone does not prove completeness (copytree is not
         # atomic; a crashed prior export leaves a partial dir) — copy
         # into a temp dir and publish each segment with one atomic
-        # rename, so an existing directory IS a complete segment
+        # rename, so an existing directory IS a complete segment.  All
+        # under the target's writer lock: its ``.tmp-`` dirs are then
+        # crashed writers' leftovers, never a live writer's staging dir
         segroot = os.path.join(t.dir, "segments")
-        # reap leftovers of crashed prior exports — never published, safe
-        for stale in os.listdir(segroot):
-            if stale.startswith(".tmp-"):
-                shutil.rmtree(os.path.join(segroot, stale),
-                              ignore_errors=True)
-        existing = set(os.listdir(segroot))
-        for seg in info["segments"]:
-            if seg in existing and not seg.startswith(".tmp-"):
-                continue
-            tmp = os.path.join(segroot, f".tmp-{uuid.uuid4().hex[:8]}")
-            dst = os.path.join(segroot, seg)
-            shutil.copytree(os.path.join(self.dir, "segments", seg), tmp)
-            try:
-                os.rename(tmp, dst)
-            except OSError:
-                # segments are immutable: if a concurrent exporter
-                # published the same segment first, losing the rename
-                # race IS success; anything else re-raises
-                shutil.rmtree(tmp, ignore_errors=True)
-                if not os.path.isdir(dst):
-                    raise
-        m = t.manifest()
-        m2 = dict(m)
-        m2["version"] = m["version"] + 1
-        m2["segments"] = list(info["segments"])
-        m2["commit_seq"] = info["commit_seq"]
-        m2["descriptor"] = info["descriptor"]
-        t._commit(m2)
+        with t._lock():
+            for stale in os.listdir(segroot):
+                if stale.startswith(".tmp-"):
+                    shutil.rmtree(os.path.join(segroot, stale),
+                                  ignore_errors=True)
+            existing = set(os.listdir(segroot))
+            for seg in info["segments"]:
+                if seg in existing:
+                    continue
+                tmp = os.path.join(segroot, f".tmp-{uuid.uuid4().hex[:8]}")
+                dst = os.path.join(segroot, seg)
+                shutil.copytree(os.path.join(self.dir, "segments", seg), tmp)
+                try:
+                    os.rename(tmp, dst)
+                except OSError:
+                    # segments are immutable: if another exporter
+                    # published the same segment first, losing the
+                    # rename race IS success; anything else re-raises
+                    shutil.rmtree(tmp, ignore_errors=True)
+                    if not os.path.isdir(dst):
+                        raise
+            t._commit(t.manifest(), segments=list(info["segments"]),
+                      commit_seq=info["commit_seq"],
+                      descriptor=info["descriptor"])
         return t
 
     # ---------------------------------------------------------- vacuum

@@ -4,19 +4,19 @@ r15 promotion of the old benchmark harness's r14 band semi-join
 (VERDICT r14 Next #1).
 
 Pins, covering every case of that harness's band tests and extended to
-the arbitrary-key paths the harness-private helper lacked:
+the arbitrary keys the harness-private helper lacked:
 
 * row-for-row parity with the OR-of-bands predicate it replaces —
   disjoint, overlapping (left-semi: no duplicates), boundary
-  (closed lo / open hi), and block-straddling bands;
-* the NUMERIC fast path's sentinel: rows the width/cast guard rejects
-  (wrong length, non-digit suffix) are still returned when they fall
-  lexicographically inside a band;
-* the GENERAL path: arbitrary-width string keys and BINARY keys,
-  exact parity via the order-preserving 7-byte prefix buckets;
-* plan shape on BOTH paths: BroadcastHashJoin LeftSemi on the block
-  id — never BroadcastNestedLoopJoin / CartesianProduct (the O(cells
-  x bands) shape the operator exists to avoid);
+  (closed lo / open hi), and block-straddling bands — on zero-padded
+  digit keys;
+* digit-key bands keep odd keys (wrong length, non-digit suffix) that
+  fall lexicographically inside a band;
+* arbitrary-width string keys and BINARY keys, exact parity via the
+  order-preserving 7-byte prefix buckets;
+* plan shape for digit and general keys: BroadcastHashJoin LeftSemi
+  on the block id — never BroadcastNestedLoopJoin / CartesianProduct
+  (the O(cells x bands) shape the operator exists to avoid);
 * StoredTable.scan_ranges == resolve(full cells filtered by the OR).
 """
 
@@ -50,8 +50,8 @@ def _or_pred(bands):
     return pred
 
 
-def _assert_same(cells, bands, block=None):
-    got = restrict_row_ranges(cells, bands, block=block)
+def _assert_same(cells, bands):
+    got = restrict_row_ranges(cells, bands)
     want = cells.filter(_or_pred(bands))
     assert got.columns == cells.columns
     g = sorted(map(tuple, got.collect()))
@@ -59,49 +59,35 @@ def _assert_same(cells, bands, block=None):
     assert g == w, (len(g), len(w))
 
 
-# ---------------------------------------------------- numeric fast path
+# ------------------------------------------------------ digit keys
 
 def test_numeric_disjoint(spark):
     cells = _mk_cells(spark)
     bands = [(f"{s:012d}", f"{s + 10:012d}") for s in (5, 120, 300, 490)]
-    _assert_same(cells, bands, block=10)
+    _assert_same(cells, bands)
 
 
 def test_numeric_overlapping_no_duplicates(spark):
     cells = _mk_cells(spark)
     bands = [(f"{s:012d}", f"{s + 30:012d}") for s in (100, 105, 110, 118)]
-    got = restrict_row_ranges(cells, bands, block=30)
+    got = restrict_row_ranges(cells, bands)
     # 48 distinct rows x 2 versions, each exactly once (no join dup)
     assert got.count() == 96
     assert got.select("row", "ts").distinct().count() == 96
-    _assert_same(cells, bands, block=30)
+    _assert_same(cells, bands)
 
 
 def test_numeric_boundaries_closed_lo_open_hi(spark):
     cells = _mk_cells(spark, n=50, versions=1)
     bands = [("000000000010", "000000000020")]
-    got = restrict_row_ranges(cells, bands, block=7)  # straddles blocks
+    got = restrict_row_ranges(cells, bands)
     rows = sorted(r["row"] for r in got.collect())
     assert rows == [f"{i:012d}" for i in range(10, 20)]
 
 
-def test_numeric_block_larger_and_smaller_than_span(spark):
-    cells = _mk_cells(spark, n=300, versions=1)
-    bands = [(f"{s:012d}", f"{s + 25:012d}") for s in (3, 90, 260)]
-    for block in (5, 25, 100, 1000):
-        _assert_same(cells, bands, block=block)
-
-
-def test_numeric_default_block_is_widest_band(spark):
-    cells = _mk_cells(spark, n=300, versions=1)
-    bands = [("000000000010", "000000000020"),
-             ("000000000100", "000000000180")]
-    _assert_same(cells, bands)  # block=None -> widest band (80)
-
-
 def test_numeric_sentinel_keeps_nonconforming_keys(spark):
-    # keys the numeric guard rejects (wrong width / non-digit) but that
-    # sort INSIDE a band must still be returned — the r14 bench helper
+    # odd keys (wrong width / non-digit) that sort INSIDE a digit-key
+    # band must still be returned — the r14 bench helper's numeric cast
     # silently dropped them (null block), the engine operator must not
     rows = [("000000000012", "o", "c", 1, 4, "a"),
             ("00000000001", "o", "c", 1, 4, "short"),      # width 11
@@ -112,13 +98,12 @@ def test_numeric_sentinel_keeps_nonconforming_keys(spark):
         rows, "row STRING, family STRING, qualifier STRING, ts LONG, "
               "type INT, value STRING")
     bands = [("000000000010", "000000000020")]
-    _assert_same(cells, bands, block=10)
-    got = {r["value"] for r in
-           restrict_row_ranges(cells, bands, block=10).collect()}
+    _assert_same(cells, bands)
+    got = {r["value"] for r in restrict_row_ranges(cells, bands).collect()}
     assert got == {"a", "nondigit", "long13"}  # lexicographic membership
 
 
-# ------------------------------------------------------- general path
+# ---------------------------------------------------- general keys
 
 def test_general_string_keys(spark):
     cells = _mk_cells(spark, n=400, versions=1, key=lambda i: f"user-{i}")

@@ -820,11 +820,8 @@ def test_replication_default_fails_batch_on_uncommitted(spark, stores,
     # the slow commit lands (the writer protocol's manifest commit,
     # arriving after the grace window instead of before it) ...
     m = src.manifest()
-    m2 = dict(m)
-    m2["version"] = m["version"] + 1
-    m2["segments"] = list(m["segments"]) + [os.path.basename(late_seg)]
-    m2["commit_seq"] = m["commit_seq"] + 1
-    src._commit(m2)
+    src._commit(m, segments=list(m["segments"]) + [os.path.basename(late_seg)],
+                commit_seq=m["commit_seq"] + 1)
     # ... and the RETRY against the same checkpoint delivers everything
     replicate(spark, src, dst, ckpt, once=True, commit_grace_s=0.3)
     assert {r.row for r in dst.cells().collect()} == {"r1", "late-row"}

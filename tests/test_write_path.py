@@ -1,6 +1,8 @@
 """Write-path tests: a mutate batch is one driver-written parquet file
-in exactly the cell schema with no Spark job, segments publish by
-rename, a minor compaction is a driver-side raw merge of the newest
+in exactly the cell schema with no Spark job, every writer's segment
+publishes by rename (a failed Spark write or a killed adopt leaves no
+``seg-`` entry outside the manifest), clone_to waits for the target's
+writer, a minor compaction is a driver-side raw merge of the newest
 small run into one file in the cell schema (never the settled bulk
 segment, never past the byte cap), the writer lock survives a dead
 holder, a writer or merge killed at any commit point leaves a table the
@@ -14,6 +16,7 @@ import signal
 import subprocess
 import sys
 import textwrap
+import threading
 from collections import Counter
 
 import pyarrow.parquet as pq
@@ -318,16 +321,24 @@ def test_vacuum_removes_stray_temp_manifests(store):
                                   ("r1", "f", "q", 10, "v1")}
 
 
-# a plain Python child (no JVM) that runs one write (a blind-put mutate
-# or a minor merge) and dies with os._exit(9) right after the named
-# commit point: the segment rename, the vN.json write, or the HEAD swap
+# a plain Python child (no JVM) that runs one write (a blind-put mutate,
+# a minor merge or an adopt) and dies with os._exit(9) right after the
+# named point: the first copied file, the segment rename, the vN.json
+# write, or the HEAD swap.  copytree's default copy_function (copy2) is
+# bound when shutil is imported, so the copy point patches the
+# copyfile that copy2 calls.
 _CRASH_CHILD = """
-import os, sys
+import os, shutil, sys
 sys.path.insert(0, {repo!r})
 from hbase_snapshot_spark import table as T
 
 point = {point!r}
-rename, write_json = os.rename, T.write_json_atomic
+rename, write_json, copyfile = os.rename, T.write_json_atomic, shutil.copyfile
+
+def crash_copyfile(src, dst, **kwargs):
+    copyfile(src, dst, **kwargs)
+    if point == "copy":
+        os._exit(9)
 
 def crash_rename(src, dst):
     rename(src, dst)
@@ -342,6 +353,7 @@ def crash_write_json(path, obj):
         os._exit(9)
 
 os.rename, T.write_json_atomic = crash_rename, crash_write_json
+shutil.copyfile = crash_copyfile
 t = T.TableStore(None, {base!r}).table({name!r})
 {call}
 """
@@ -443,6 +455,108 @@ def test_replicate_never_ships_compacted_or_temp_segments(spark, tmp_path):
     replicate(spark, src, dst, str(tmp_path / "ckpt"), once=True)
     assert _raw(dst) == wal
     assert _cellset(dst.read()) == _cellset(src.read())
+
+
+def _unlisted(t):
+    """the ``segments/`` entries the manifest does not list"""
+    return sorted(set(os.listdir(os.path.join(t.dir, "segments")))
+                  - set(t.manifest()["segments"]))
+
+
+def test_adopt_killed_mid_copy_leaves_only_a_temp_dir(spark, tmp_path):
+    """an adopt killed after its first copied file leaves one hidden
+    ``.tmp-`` dir: replication ships exactly the committed cells and
+    vacuum reaps the temp dir"""
+    src = _mk(TableStore(spark, str(tmp_path / "src")), scope=1)
+    dst = _mk(TableStore(spark, str(tmp_path / "dst")), scope=1)
+    src.mutate([Put("a").add("f", "q", "1", ts=1),
+                Put("b").add("f", "q", "2", ts=1)])
+    # the directory to adopt: a segment of another table (data file +
+    # skip manifest, so the kill lands mid-copy)
+    prep = _mk(TableStore(spark, str(tmp_path / "prep")))
+    prep.mutate([Put("adopted").add("f", "q", "x", ts=1)])
+    prep_dir = _seg_dir(prep, prep.manifest()["segments"][0])
+    assert len(os.listdir(prep_dir)) == 2
+    raw = _raw(src)
+    _crash_child(src, "copy", f"t.adopt_segment({prep_dir!r})")
+
+    (orphan,) = _unlisted(src)
+    assert orphan.startswith(".tmp-seg-") and "-adopted-" in orphan
+    assert _raw(src) == raw
+    replicate(spark, src, dst, str(tmp_path / "ckpt"), once=True)
+    assert _raw(dst) == raw
+    assert src.vacuum() == [orphan]
+    assert _unlisted(src) == []
+
+
+@pytest.mark.parametrize("writer", ["append_cells", "compact_major"])
+def test_failed_spark_write_leaves_no_segment(spark, store, monkeypatch, writer):
+    """an append_cells or compact(major=True) whose Spark job fails at
+    runtime leaves nothing under ``segments/`` outside the manifest,
+    and the table takes the next write"""
+    t = _mk(store, writer)
+    t.mutate([Put("r1").add("f", "q", "v1", ts=1)])
+    segs, want = t.manifest()["segments"], _cellset(t.read())
+
+    def bad_ts(cells, spec=None):
+        return cells.withColumn(
+            "ts", F.concat(F.col("value"), F.lit("z")).cast("long"))
+
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        if writer == "append_cells":
+            t.append_cells(bad_ts(t.cells()))
+        else:
+            # the major compaction's resolved stream fails the same way
+            monkeypatch.setattr(table_mod, "resolve", bad_ts)
+            t.compact(major=True)
+    monkeypatch.undo()
+    assert os.listdir(os.path.join(t.dir, "segments")) == segs
+    assert t.manifest()["segments"] == segs and _cellset(t.read()) == want
+    t.append_cells(t.cells().withColumn("row", F.lit("r2")))
+    assert {c[0] for c in _cellset(t.read())} == {"r1", "r2"}
+    assert _unlisted(t) == []
+
+
+def test_clone_to_waits_for_the_target_writer(spark, store, tmp_path):
+    """clone_to reaps, copies and commits under the target's writer
+    lock: a live writer's ``.tmp-`` staging dir is never reaped"""
+    t = _mk(store, "clsrc")
+    t.mutate([Put("r1").add("f", "q", "v1", ts=1)])
+    t.snapshot("s1")
+    other = TableStore(spark, str(tmp_path / "other"))
+    target = t.clone_to(other, "backup", "s1")
+    t.mutate([Put("r2").add("f", "q", "v2", ts=2)])
+    t.snapshot("s2")
+    v = target.manifest()["version"]
+    staging = _seg_dir(target, ".tmp-seg-000009-wal-0000live")
+    locked, release = threading.Event(), threading.Event()
+
+    def writer():
+        with target._lock():
+            os.makedirs(staging)
+            locked.set()
+            release.wait(60)
+            shutil.rmtree(staging, ignore_errors=True)
+
+    cloned = []
+    w = threading.Thread(target=writer)
+    c = threading.Thread(target=lambda: cloned.append(
+        t.clone_to(other, "backup", "s2", incremental=True)))
+    w.start()
+    assert locked.wait(60)
+    c.start()
+    try:
+        c.join(1.0)
+        assert os.path.isdir(staging)
+        assert target.manifest()["version"] == v and not cloned
+    finally:
+        release.set()
+        w.join(60)
+        c.join(60)
+    assert not w.is_alive() and not c.is_alive()
+    assert cloned and target.manifest()["version"] == v + 1
+    assert _cellset(target.read()) == _cellset(t.read())
+    assert _unlisted(target) == []
 
 
 # a plain Python child (no JVM) that snapshots the table and dies with
